@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: runs every gate query on SPARK_GRAFT_SF_DIR plus a
   * chessmate-workload section (ingest games/sec, embedding positions/sec,
@@ -61,27 +61,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // test tables are single-row-group files; allow sub-file splits
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The generated-code cache defaults to 100 entries; a 123-gate
-      // sweep churns it, so every pass-2 (soak) run re-pays janino
-      // compilation (~0.3s/query -- run 2's soak read a uniform 1.3x
-      // over warm with FLAT gc_offsets, the codegen-eviction signature,
-      // not real engine degradation). A steady-state service runs a
-      // bounded set of plans that fits its cache; size the cache to
-      // this harness's plan count so soak measures the engine.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.benchCpus
+    val spark = GraftSession.bench("graft-bench")
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val warmResults = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -123,7 +104,7 @@ object Bench {
     }
 
     val canaryPre = cpuCanary()
-    val mcPre = mcCanary(cpus.toInt)
+    val mcPre = mcCanary(cpus)
 
     // 1) Gate queries (SURVEY §2 inventory) on the sf tables: one cold
     // run (first execution this session), then warm = MEDIAN OF 3
@@ -184,7 +165,7 @@ object Bench {
     // accumulation), pass 2 must be slower than pass 1's warm column;
     // if pass 2 matches pass 1, a slow gate in pass 1 was external
     // (host contention), proven without the driver in the loop.
-    val mcMid = mcCanary(cpus.toInt)
+    val mcMid = mcCanary(cpus)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       var failed = false
       tOffsets(name + "#2") = sinceStart()
@@ -349,7 +330,7 @@ object Bench {
     // smaller one is the closer bound on the machine's quiet speed; a
     // large pre/post GAP additionally localizes WHEN contention hit.
     val canaryPost = cpuCanary()
-    val mcPost = mcCanary(cpus.toInt)
+    val mcPost = mcCanary(cpus)
     val canarySec = math.min(canaryPre, canaryPost)
     val mcSec = math.min(mcPre, math.min(mcMid, mcPost))
     val totalSoak = soakResults.values.sum

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +9,7 @@ object Verify {
     // restrict the dump to those queries; the driver passes none.
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // If events.parquet carries TIMESTAMP(NANOS), read as raw ns longs
-      // (TIMESTAMP(MICROS) vintages normalize in Tables.events instead).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // test tables are single-row-group files; allow sub-file splits
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.bench("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A throwing gate must leave an explicit record, not a silent hole:
     // the driver's compare only reports on dumped dirs, so an exception

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llmops.{Ann, Pq}
+import graft.core.GraftSession
 
 /** Operational IVF x SQ8 ANN index: `build` trains the centroids and
   * per-dimension SQ8 bounds, writes the cell-partitioned codes artifact
@@ -114,13 +115,7 @@ object AnnIndexApp {
     }
     val idCol = sflag("id-col", "vec_id")
     val vecCol = sflag("vec-col", "embedding")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-ann-index")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-ann-index")
     args(0) match {
       case "build" =>
         val m = build(spark, args(1), args(2), flag("cells", 16),

@@ -2,7 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Health, Sanitizer}
+import graft.core.{GraftSession, Health, Sanitizer}
 
 /** Config-surface CLI (reference lib/cli/config_command.ml): print the
   * EFFECTIVE engine configuration with secrets redacted, run the
@@ -28,8 +28,8 @@ object ConfigApp {
     def opt(name: String) = env(name).getOrElse("(unset)")
     Seq(
       "tables_dir" -> dir,
-      "spark_master" -> opt("SPARK_MASTER"),
-      "shuffle_partitions" -> env("SPARK_SHUFFLE_PARTITIONS").getOrElse("32"),
+      "spark_master" -> GraftSession.appMaster(env),
+      "shuffle_partitions" -> GraftSession.appShufflePartitions(env),
       "embed_dims" -> "(from vectors table; 1536 when absent)",
       "max_body_bytes" -> ServeApp.maxBodyBytes.toString,
       "max_limit" -> graft.query.QueryIntent.maxLimit.toString,
@@ -86,14 +86,7 @@ object ConfigApp {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ConfigApp <tablesDir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-config")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.app("graft-config", "spark.ui.enabled" -> "false")
     val (lines, code) = report(spark, args(0))
     lines.foreach(println)
     spark.stop()

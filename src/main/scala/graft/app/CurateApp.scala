@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llmops.{Curation, TextAnalysis}
+import graft.core.GraftSession
 
 /** Operational runner for a curation pipeline over a documents table —
   * the llm_pipeline gate chain as durable STAGE ARTIFACTS (the third
@@ -179,14 +180,7 @@ object CurateApp {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-curate")
     val report = run(spark, cfg)
     println("[curate] stage artifacts under " + cfg.outDir +
       ": scored/ kept/ shards/ report/")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llmops.Dedup
+import graft.core.GraftSession
 
 /** Operational runner for the near-dup STAGE PIPELINE over a documents
   * table: materialize each stage as a parquet artifact under `outDir`,
@@ -209,14 +210,7 @@ object DedupApp {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-dedup")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-dedup")
     val report = run(spark, cfg)
     println("[dedup] stage artifacts under " + cfg.outDir +
       (if (cfg.incremental.isDefined)

@@ -1,8 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.embed.{DeterministicEmbedder, VectorsJob}
 import graft.ingest.IngestJob
+import graft.core.GraftSession
 
 /** CLI: ingest a directory/glob of PGN files into parquet tables.
   *
@@ -19,14 +19,7 @@ object IngestApp {
     val Array(in, out) = args.take(2)
     val dims = args.drop(2).find(!_.startsWith("--")).map(_.toInt)
       .getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-ingest")
 
     // --splittable: record-boundary-splitting reader for single huge
     // dump files (one file fans out across tasks; identical game_ids)

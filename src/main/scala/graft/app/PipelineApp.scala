@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** One-command curation pipeline: DedupApp then CurateApp (which ends in
   * the shard-export plan) as a single run sharing ONE manifest —
@@ -597,14 +598,7 @@ object PipelineApp {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-pipeline")
     val report = run(spark, cfg)
     println("[pipeline] manifest " + manifestPath(cfg.outDir) +
       "; artifacts under " + cfg.outDir + "/{dedup,curate}/")

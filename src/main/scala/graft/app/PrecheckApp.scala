@@ -1,8 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ingest.{GameMetadata, IngestJob, PgnParser}
+import graft.core.GraftSession
 
 /** CLI: TWIC-style validation-only pass (reference
   * lib/cli/twic_precheck_command.ml:31-89): parse errors, missing moves,
@@ -17,12 +17,7 @@ object PrecheckApp {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: PrecheckApp <pgnPath>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-precheck")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-precheck")
     import spark.implicits._
 
     val issues = IngestJob.readPgn(spark, args(0)).flatMap { rec =>

@@ -1,9 +1,9 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.query.{AgentEvaluator, EvalCache, HybridExecutor, QueryIntent,
   Reranker, ResultFormatter}
 import graft.embed.DeterministicEmbedder
+import graft.core.GraftSession
 
 /** CLI: NL question -> hybrid search over ingested tables.
   *
@@ -48,14 +48,7 @@ object QueryApp {
     }
     val question = rest.filterNot(_.startsWith("--")).mkString(" ")
     require(question.nonEmpty, usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-query")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-query")
 
     val questions = question.split(";;").map(_.trim).filter(_.nonEmpty)
     val plans = questions.toSeq.map(q =>

@@ -6,7 +6,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.embed.DeterministicEmbedder
-import graft.core.Sanitizer
+import graft.core.{GraftSession, Sanitizer}
 import graft.query.{HybridExecutor, QueryIntent, RateLimiter, ResultFormatter}
 
 /** P1 live HTTP surface (reference services/api/chessmate_api.ml:586-724,
@@ -492,6 +492,14 @@ object ServeApp {
     server
   }
 
+  /** Serving scheduler mode, `SPARK_SCHEDULER_MODE` (default FAIR): FAIR
+    * across per-connection pools lets concurrent requests share the
+    * cluster instead of convoying behind the first-submitted job; FIFO
+    * can win closed-loop throughput because each job gets all cores.
+    */
+  def schedulerMode: (String, String) =
+    "spark.scheduler.mode" -> sys.env.getOrElse("SPARK_SCHEDULER_MODE", "FAIR")
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ServeApp <tablesDir> [--port=8080] " +
       "[--rate-limit=RPM[:BURST]] [--rate-limit-body=BPM[:BURST]] " +
@@ -526,18 +534,7 @@ object ServeApp {
           bodyBytesPerMinute = body.map(_._1),
           bodyBucketSize = body.flatMap(_._2))
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR across per-connection pools: concurrent requests share the
-      // cluster instead of convoying behind the first-submitted job.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_SCHEDULER_MODE", "FAIR"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-serve", schedulerMode)
 
     val games = spark.read.parquet(s"$dir/games").cache()
     val players = spark.read.parquet(s"$dir/players").cache()

@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Health probe analog (reference lib/core/health.ml): checks every table
   * under a graft output dir is readable and row counts are consistent,
@@ -12,12 +12,7 @@ object SmokeApp {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: SmokeApp <tablesDir>")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-smoke")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.app("graft-smoke")
 
     var healthy = true
     def check(name: String)(f: => Long): Unit = {

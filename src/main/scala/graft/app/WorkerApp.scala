@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.embed.{DeterministicEmbedder, Embedder, VectorsJob}
+import graft.core.GraftSession
 
 /** E7 — the embedding worker loop (reference
   * services/embedding_worker/embedding_worker.ml): a long-running drain
@@ -194,14 +195,7 @@ object WorkerApp {
       .getOrElse(16))
     val dims = flag("dims").map(_.toInt).getOrElse(64)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-worker")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.app("graft-worker")
 
     println(s"[worker] configuration: dir=$dir batch_size=$batchSize " +
       s"poll_sleep=${pollSleepSec}s exit_after_empty=" +

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llmops.Ann
+import graft.core.GraftSession
 
 /** Measure ANN recall@k vs brute force on the embeddings table: the
   * cell-probe variants trade recall for scan reduction; this prints the
@@ -51,11 +52,8 @@ object AnnRecall {
     val k = if (args.length > 1) args(1).toInt else 10
     val nQ = if (args.length > 2) args(2).toInt else 20
     val corpus = if (args.length > 3) args(3) else "table"
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-ann-recall",
+      "spark.sql.shuffle.partitions" -> "32")
 
     val emb = (corpus match {
       case "table" => spark.read.parquet(s"$sf/embeddings.parquet")
@@ -192,8 +190,7 @@ object AnnRecall {
     // configuration (llm_ivf_sq8_atrest); normalized = the recommended
     // quality configuration (quantize L2-normalized vectors).
     {
-      val dir = java.nio.file.Files
-        .createTempDirectory("annrecall_ivf_sq8").toString
+      val dir = TempDirs.create("annrecall_ivf_sq8")
       val cents = Ann.trainCentroids(emb, "embedding", 16)
       val mRaw = graft.llmops.Pq.sq8Train(emb, "embedding")
       graft.llmops.Pq.writeIvfSq8AtRest(emb, "vec_id", "embedding",

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Production-scale BPE evidence: train >= 1,024 merges with
   * [[graft.llmops.TextAnalysis.bpeTrainBatched]] and record wall /
@@ -26,13 +26,8 @@ object Bpe1k {
     val target = if (args.length > 1) args(1).toInt else 1024
     val perRound = if (args.length > 2) args(2).toInt else 32
     val wordsPerDoc = 16
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-bpe1k",
+      "spark.sql.shuffle.partitions" -> "32")
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         concat_ws(" ", transform(sequence(lit(0), lit(wordsPerDoc - 1)),

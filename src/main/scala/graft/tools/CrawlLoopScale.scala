@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Two-round crawler loop at scale (r18): round 1 crawls corpus A and
   * emits a frontier; a synthetic fetcher "fetches" the frontier's TOP
@@ -43,15 +43,7 @@ object CrawlLoopScale {
     val shards = if (args.length > 2) args(2).toInt else 32
     val links = if (args.length > 3) args(3).toInt else 3
     val topK = if (args.length > 4) args(4).toLong else 500000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-crawl-loop-scale")
     import spark.implicits._
 
     def timed[A](f: => A): (A, Double) = {
@@ -60,8 +52,7 @@ object CrawlLoopScale {
     }
 
     // ---- corpus A ----
-    val dirA = java.nio.file.Files
-      .createTempDirectory("loop_a").toString
+    val dirA = TempDirs.create("loop_a")
     spark.range(0, shards, 1, shards).map { s =>
       val gz = new java.util.zip.GZIPOutputStream(
         new java.io.BufferedOutputStream(java.nio.file.Files
@@ -78,8 +69,7 @@ object CrawlLoopScale {
 
     val base = graft.app.PipelineApp.parse(Array("-", "/tmp/ignored",
       s"--warc=$dirA", "--frontier"))
-    val out1 = java.nio.file.Files
-      .createTempDirectory("loop_out1").toString
+    val out1 = TempDirs.create("loop_out1")
     val (_, r1Sec) = timed(graft.app.PipelineApp.runIngest(
       spark, base.copy(outDir = out1), dirA, s"$out1/ingest"))
     val frontier1 = spark.read.parquet(s"$out1/ingest/frontier")
@@ -88,8 +78,7 @@ object CrawlLoopScale {
     // ---- synthetic fetcher: top-K frontier urls IN SCHEDULE ORDER
     // (domain, fetch_time_ms) -> corpus B. Each fetched page links
     // back to a round-1 url (/p/<idx>) and out to two new urls. ----
-    val dirB = java.nio.file.Files
-      .createTempDirectory("loop_b").toString
+    val dirB = TempDirs.create("loop_b")
     val fetchList = frontier1
       .orderBy(col("domain"), col("fetch_time_ms"))
       .limit(topK.toInt)
@@ -172,8 +161,7 @@ object CrawlLoopScale {
     }
 
     // ---- round 2 with --crawled pointing at round 1's docs ----
-    val out2 = java.nio.file.Files
-      .createTempDirectory("loop_out2").toString
+    val out2 = TempDirs.create("loop_out2")
     val cfg2 = base.copy(outDir = out2,
       warc = Some(dirB), crawled = Some(s"$out1/ingest/docs"))
     val (_, r2Sec) = timed(graft.app.PipelineApp.runIngest(

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** End-to-end LLM-curation pipeline at replicated scale — the llmops
   * analogue of [[PipelineScale]] (which proves the chess path at 100k
@@ -36,18 +37,8 @@ object CurationScale {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val replicas = if (args.length > 1) args(1).toInt else 200
     val variantMod = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val root = java.nio.file.Files
-      .createTempDirectory("curation_scale").toString
+    val spark = GraftSession.bench("graft-curation-scale")
+    val root = TempDirs.create("curation_scale")
 
     // Per-pipeline-stage Spark task metrics: at 10M+ docs the honest
     // scale story is WHERE the shuffle bytes and spill land, not just

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llmops.LearnedEmbeddings
+import graft.core.GraftSession
 
 /** Learned-embedding training at replicated scale: replicate the sf
   * documents corpus (replica r appends variant token v<r%10>, so vocab
@@ -39,18 +40,8 @@ object EmbedTrainScale {
     val vocabSize = if (args.length > 3) args(3).toInt else 10000
     val window = if (args.length > 4) args(4).toInt else 5
     val dims = if (args.length > 5) args(5).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val root = java.nio.file.Files
-      .createTempDirectory("embed_scale").toString
+    val spark = GraftSession.bench("graft-embed-train-scale")
+    val root = TempDirs.create("embed_scale")
 
     val stageMetrics =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Single-decode `--frontier` proof at crawl scale (r18): the ingest
   * stage used to decode the WARC corpus TWICE when the frontier was
@@ -34,19 +35,10 @@ object FrontierScale {
     val payloadBytes = if (pos.length > 1) pos(1).toInt else 1024
     val shards = if (pos.length > 2) pos(2).toInt else 32
     val links = if (pos.length > 3) pos(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-frontier-scale")
     import spark.implicits._
 
-    val dir = reuseDir.getOrElse(java.nio.file.Files
-      .createTempDirectory("frontier_scale").toString)
+    val dir = reuseDir.getOrElse(TempDirs.create("frontier_scale"))
     val have = {
       val p = java.nio.file.Paths.get(dir)
       java.nio.file.Files.exists(p) &&
@@ -106,13 +98,11 @@ object FrontierScale {
     // reps: the first iteration of whichever leg runs first pays JIT/
     // codegen warm-up for the shared UDF kernels; min-of-N is the
     // steady-state comparison (legs alternate, same warm cache)
-    val outA = java.nio.file.Files
-      .createTempDirectory("frontier_one").toString
+    val outA = TempDirs.create("frontier_one")
     var oneSec = Double.MaxValue
 
     // ---- leg B: the r17 two-pass shape, inline ----
-    val outB = java.nio.file.Files
-      .createTempDirectory("frontier_two").toString
+    val outB = TempDirs.create("frontier_two")
     def decoded(): DataFrame = {
       val raw = graft.llmops.Warc.readWarcDir(spark, dir,
         byteTransparent = true)

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llmops.{Dedup, TextAnalysis}
+import graft.core.GraftSession
 
 /** Kernel-level expr-vs-udf A/B harness: min-of-3 reps in ONE JVM over
   * the ScanProf synthetic corpus, so the comparison is immune to the
@@ -27,14 +27,8 @@ object KProf {
     val nDocs = if (args.nonEmpty) args(0).toLong else 2000000L
     val nB = if (args.length > 1) args(1).toLong else nDocs / 20
     val only = args.drop(2).toSet
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docsPath = java.nio.file.Files
-      .createTempDirectory("kprof").toString + "/docs"
+    val spark = GraftSession.bench("graft-kprof")
+    val docsPath = TempDirs.create("kprof") + "/docs"
     spark.range(nDocs).toDF("doc_id")
       .withColumn("text", concat_ws(" ",
         transform(sequence(lit(0), lit(189)), i =>

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** The 10x scale proof the 20k stress row doesn't give: the FULL
   * pipeline — splittable bzip2 ingest -> relational tables -> embedding
@@ -23,21 +23,11 @@ object PipelineScale {
     // machine, not the raw byte count
     val splitMB = if (args.length > 1) args(1).toDouble else 0.25
     val dims = if (args.length > 2) args(2).toInt else 256
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-pipeline-scale")
 
     // ONE bzip2 dump: distinct Event + White per game (distinct
     // game_ids AND a real player dimension).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pipeline_scale").toString
+    val dir = TempDirs.create("graft_pipeline_scale")
     val base = graft.core.Fixtures.extendedSampleGame
     val codec = new org.apache.hadoop.io.compress.BZip2Codec()
     codec.setConf(new org.apache.hadoop.conf.Configuration())

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Dump physical plans of the load-bearing pipelines for scale review:
   * confirms predicate pushdown (PushedFilters), column pruning
@@ -10,12 +10,7 @@ import org.apache.spark.sql.functions._
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-plan-check")
 
     def show(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       println(s"\n========== $name ==========")
@@ -71,8 +66,7 @@ object PlanCheck {
       val emb = graft.core.Tables.embeddings(spark, sf)
       val cents = graft.llmops.Ann.trainCentroids(emb, "embedding",
         nCells = 16)
-      val dir = java.nio.file.Files
-        .createTempDirectory("plancheck_ann").toString + "/vectors"
+      val dir = TempDirs.create("plancheck_ann") + "/vectors"
       graft.llmops.Ann.writePartitionedByCell(emb, "embedding", cents, dir)
       val q = emb.where(col("vec_id") === 7)
         .select(col("embedding").cast("array<double>"))
@@ -593,8 +587,7 @@ object PlanCheck {
     // text away (read only url + resolved_links), or the "one decode,
     // cheap re-reads" story silently re-reads the whole corpus text.
     locally {
-      val dir = java.nio.file.Files
-        .createTempDirectory("plan_pages").toString
+      val dir = TempDirs.create("plan_pages")
       spark.range(0, 100).selectExpr("id AS doc_id",
         "concat('https://ex', CAST(id % 3 AS STRING), '.com/p/', " +
           "CAST(id AS STRING)) AS url",

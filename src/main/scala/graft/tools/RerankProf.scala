@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Step-level wall profile of the chess_agent_rerank gate: which of
   * the per-run Spark actions (summaries build, page collect, candidate
@@ -9,17 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RerankProf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-rerank-prof")
     val (t, _) = graft.gate.ChessQueries.data(spark)
     t.games.count(); t.players.count(); t.positions.count()
     def time(f: => Unit): Double = {

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llmops.Dedup
+import graft.core.GraftSession
 
 /** Dedup-family scaling curves: run the LSH / fingerprint pair
   * generators on 1x / 4x / 16x replicas of the sf documents corpus and
@@ -23,15 +24,8 @@ object ScaleCurve {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val scales = (if (args.length > 1) args(1) else "1,4,16")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-scale-curve",
+      "spark.sql.shuffle.partitions" -> "32")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llmops.TextAnalysis
+import graft.core.GraftSession
 
 /** Per-operator wall profile of the TEXT-SCAN family over a synthetic
   * web-shaped corpus (the ShardTail doc generator) — the harness that
@@ -19,19 +20,9 @@ object ScanProf {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 2000000L
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-scan-prof")
 
-    val docsPath = java.nio.file.Files
-      .createTempDirectory("scanprof").toString + "/docs"
+    val docsPath = TempDirs.create("scanprof") + "/docs"
     spark.range(nDocs).toDF("doc_id")
       .withColumn("text", concat_ws(" ",
         transform(sequence(lit(0), lit(189)), i =>

@@ -2,8 +2,8 @@ package graft.tools
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import graft.core.GraftSession
 
-import org.apache.spark.sql.SparkSession
 
 /** Sustained concurrent serving throughput — the measured analog of the
   * reference's oha load test (docs/guides/operations/LOAD_TESTING.md:
@@ -25,6 +25,11 @@ import org.apache.spark.sql.SparkSession
   * rows — the uncached row is the honest engine number, the cached row
   * is what a production deployment of this serving surface would see on
   * a skewed query mix.
+  *
+  * The scheduler mode is ServeApp's: FAIR lets per-connection pools share
+  * the cores (better tail under concurrency); FIFO can win closed-loop
+  * THROUGHPUT because each job gets all cores and finishes sooner.
+  * Measure both: `SPARK_SCHEDULER_MODE=FIFO` flips it.
   */
 object ServeLoad {
   def main(args: Array[String]): Unit = {
@@ -32,22 +37,8 @@ object ServeLoad {
     val threads = if (args.length > 1) args(1).toInt else 16
     val perThread = if (args.length > 2) args(2).toInt else 25
     val cacheEntries = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // FAIR = per-connection pools share the cores (better tail under
-      // concurrency); FIFO can win closed-loop THROUGHPUT because each
-      // job gets all cores and finishes sooner. Measure both:
-      // GRAFT_SERVE_SCHEDULER=FIFO flips it.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("GRAFT_SERVE_SCHEDULER", "FAIR"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-serve-load",
+      graft.app.ServeApp.schedulerMode)
     import spark.implicits._
 
     // same synthetic corpus + cached serving tables as Bench's chess

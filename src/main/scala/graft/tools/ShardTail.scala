@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.app.CurateApp
+import graft.core.GraftSession
 
 /** Profile the curate stage chain (scored/kept/shards/report — the exact
   * [[graft.app.CurateApp]] bodies) over a synthetic corpus shaped like
@@ -25,21 +25,12 @@ object ShardTail {
     val nDocs = if (pos.nonEmpty) pos(0).toLong else 2000000L
     val shardTokens = if (pos.length > 1) pos(1) else "16384"
     val root = if (pos.length > 2) pos(2)
-      else java.nio.file.Files.createTempDirectory("shard_tail").toString
+      else TempDirs.create("shard_tail")
     val doExport = flags.contains("--export")
     val shardFiles = flags.collectFirst {
       case f if f.startsWith("--shard-files=") =>
         f.stripPrefix("--shard-files=").toInt }.getOrElse(512)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-shard-tail")
 
     def timed[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

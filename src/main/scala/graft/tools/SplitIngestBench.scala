@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
+
 
 /** S1-at-scale evidence: ingest wall for ONE large PGN dump file via the
   * wholetext reader (a single task regardless of cluster size) vs
@@ -20,17 +21,9 @@ object SplitIngestBench {
     val splitMB = if (args.length > 1 && !args(1).startsWith("--"))
       args(1).toInt else 8
     val bz2 = args.contains("--bz2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-split-ingest-bench")
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_split_bench").toString
+    val dir = TempDirs.create("graft_split_bench")
     val base = graft.core.Fixtures.extendedSampleGame
     val fileName = if (bz2) "big.pgn.bz2" else "big.pgn"
     val raw = new java.io.FileOutputStream(s"$dir/$fileName")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** llm_stream_window cost forensics: run the gate body N times in one
   * session and break the wall into phases — setup (dir wipe + schema
@@ -16,14 +16,8 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-stream-probe",
+      "spark.sql.shuffle.partitions" -> "32")
 
     def sec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llmops.Warc
+import graft.core.GraftSession
 
 /** WARC reader throughput at GB scale: synthesize sharded `.warc`
   * files in parallel (one file per task — the crawl-segment shape),
@@ -62,7 +63,7 @@ object WarcScale {
   private def oneBig(spark: SparkSession, nRecords: Long,
       payloadBytes: Int, reuseDir: Option[String]): Unit = {
     val dir = reuseDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("warc_onebig").toString)
+      TempDirs.create("warc_onebig"))
     val path = java.nio.file.Paths.get(dir, "big.warc.gz")
     val t0 = System.nanoTime()
     var raw = 0L
@@ -112,22 +113,14 @@ object WarcScale {
     val nRecords = if (pos.nonEmpty) pos(0).toLong else 2000000L
     val payloadBytes = if (pos.length > 1) pos(1).toInt else 1024
     val shards = if (pos.length > 2) pos(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.bench("graft-warc-scale")
     import spark.implicits._
     oneBigN.foreach { n =>
       oneBig(spark, n, payloadBytes, reuseDir)
       spark.stop(); return
     }
     val dir = reuseDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("warc_scale").toString)
+      TempDirs.create("warc_scale"))
 
     // parallel shard generation: each task streams its records straight
     // to one .warc file (and its .warc.gz twin)
@@ -214,8 +207,7 @@ object WarcScale {
     // .warc.wet.gz, then a validating read-back. declared_len_ok on
     // the read-back gates byte-exact render/parse for EVERY record.
     if (flags.contains("--wet")) {
-      val wetDir = java.nio.file.Files
-        .createTempDirectory("wet_out").toString
+      val wetDir = TempDirs.create("wet_out")
       val tw = System.nanoTime()
       val wet = Warc.toWet(
         Warc.readWarc(spark, s"$dir/*.warc")

@@ -1642,13 +1642,23 @@ class LlmOpsSpec extends SparkSpec {
       graft.llmops.Dedup.simhashUdfFor(64)(tokens(col("text"))).as("udf64"),
       // the text-level form (tokenizes inside, the r19 hot path)
       graft.llmops.Dedup.simhashTextUdf(16)(col("text")).as("txt16"),
-      graft.llmops.Dedup.simhashTextUdf(64)(col("text")).as("txt64"))
+      graft.llmops.Dedup.simhashTextUdf(64)(col("text")).as("txt64"),
+      // the packed-long form simhashPairs carries
+      graft.llmops.Dedup.simhashTextLongUdf(16)(col("text")).as("long16"),
+      graft.llmops.Dedup.simhashTextLongUdf(64)(col("text")).as("long64"))
       .collect()
+    // bit (bits-1-j) of the long == char j of the string form
+    def unpack(sh: Long, bits: Int): String =
+      (0 until bits).map(j => if (((sh >>> (bits - 1 - j)) & 1L) == 1L) '1'
+        else '0').mkString
     both.foreach { r =>
       assert(r.getString(0) == r.getString(1))
       assert(r.getString(2) == r.getString(3))
       assert(r.getString(0) == r.getString(4))
       assert(r.getString(2) == r.getString(5))
+      assert(unpack(r.getLong(6), 16) == r.getString(4))
+      assert(r.getLong(6) >>> 16 == 0L)
+      assert(unpack(r.getLong(7), 64) == r.getString(5))
     }
   }
 
