@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * UTF-8 → java.lang.String transcode per element per pair; here
   * membership hashes `UTF8String` byte arrays directly.
   *
-  * Semantics are IDENTICAL to Dedup.jaccardUdf (spec-asserted):
+  * Semantics are IDENTICAL to the set-Jaccard UDF it replaced (the
+  * test-scope parity reference, spec- and property-asserted):
   * elements are deduplicated set-wise on both sides,
   * `inter / (|A| + |B| - inter)` as one double division, 0.0 when the
   * union is empty. String equality == byte equality for Spark's

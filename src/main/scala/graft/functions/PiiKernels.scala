@@ -14,9 +14,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * (`piiEmailPattern` / `piiIpPattern` / `piiNumPattern`), matched
   * directly over a row's UTF-8 bytes with NO regex engine, NO
   * UTF8String -> String transcode, and NO output copy when a pass finds
-  * nothing. The regex chain (`redactPii`, `redactPiiUdf`, `piiTotalUdf`)
-  * is retained as the parity reference; PiiSpec + LlmOpsSpec assert
-  * byte-equality on corpus + adversarial rows.
+  * nothing. The regex chain these replace (regexp_replace, and the
+  * same patterns as compiled java.util.regex UDFs) is the test-scope
+  * parity reference (ReferenceKernels); PiiSpec, LlmOpsSpec and
+  * KernelParityPropertySpec assert byte-equality on corpus,
+  * adversarial and generated hostile rows.
   *
   * Exactness argument (why a byte walk reproduces java.util.regex on
   * ANY input, not just ASCII): every character class in the three
@@ -243,7 +245,7 @@ object PiiScan {
 
   /** The full EMAIL -> IP -> NUM redaction chain over UTF-8 bytes;
     * byte-identical to
-    * `redactPii` / `redactPiiUdf` (three `replaceAll`s chained).
+    * the reference regex chain (three `replaceAll`s chained).
     */
   private[graft] def redactBytes(b: Array[Byte]): Array[Byte] =
     replacePass(replacePass(replacePass(b, findEmail, EMAIL),
@@ -266,9 +268,9 @@ object PiiScan {
     (countPass(b, findEmail), countPass(b, findIp), countPass(b, findNum))
 }
 
-/** [[TextFunctions.redactPii]] as a native expression: the three-pass
-  * replacement chain over the row's UTF-8 bytes. Null in, null out
-  * (exactly the regexp_replace chain / redactPiiUdf).
+/** PII redaction as a native expression: the three-pass EMAIL -> IP ->
+  * NUM replacement chain over the row's UTF-8 bytes. Null in, null out
+  * (exactly the reference regexp_replace chain).
   */
 case class PiiRedactExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -344,9 +346,9 @@ object PiiCountsExpr {
       ColumnBridge.expression(text.cast("string"))))
 }
 
-/** [[TextFunctions.piiTotalUdf]] as a native expression: total matches
-  * across the three patterns; null text counts 0 (never null), exactly
-  * the UDF.
+/** PII match total as a native expression: total matches across the
+  * three patterns; null text counts 0 (never null), exactly the
+  * reference regex count.
   */
 case class PiiTotalExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

@@ -3,15 +3,18 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis / fingerprinting primitives as Catalyst column
-  * expressions. Everything is built from md5 + integer arithmetic so each
-  * operator has an EXACT cross-engine oracle (DuckDB SQL computes the
-  * same bytes) -- no engine-specific hash functions, no float-order
-  * nondeterminism (ratios are a single division of integer counts).
+/** Shared text primitives as Catalyst column expressions. Everything is
+  * built from md5 + integer arithmetic so each operator has an EXACT
+  * cross-engine oracle (DuckDB SQL computes the same bytes) -- no
+  * engine-specific hash functions, no float-order nondeterminism
+  * (ratios are a single division of integer counts).
   *
-  * These power the beyond-reference LLM-data-pipeline operators
-  * (BASELINE.json:6): dedup (minhash/simhash/jaccard), language ID,
-  * quality scoring, token counting, document fingerprinting.
+  * The per-family production kernels (simhash, window fingerprints,
+  * minhash bands, PII, quality, language ID, C4) live in
+  * [[graft.llmops.Dedup]], [[graft.llmops.TextAnalysis]],
+  * [[graft.llmops.Web]] and the native expressions of this package;
+  * the column-expression forms they replaced are test-scope parity
+  * references.
   */
 object TextFunctions {
 
@@ -34,87 +37,6 @@ object TextFunctions {
       .otherwise(transform(sequence(lit(0), size(toks) - n), i =>
         concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
   }
-
-  /** MinHash signature: k seeded md5 hashes, lexicographic-min hex string
-    * per seed. String-min avoids hex->int conversions entirely, so Spark
-    * and any SQL oracle agree byte-for-byte. Empty input -> sentinel
-    * hashes (md5 of "seed:"). Column-expression form for composition;
-    * the hot path is Dedup.minhashBandKeys (compiled UDF).
-    */
-  def minhashSignature(shingExpr: Column, k: Int): Column =
-    bind(shingExpr) { shing =>
-      transform(sequence(lit(0), lit(k - 1)), seed =>
-        coalesce(
-          array_min(transform(shing, s =>
-            md5(concat(seed.cast("string"), lit(":"), s)))),
-          md5(concat(seed.cast("string"), lit(":")))))
-    }
-
-  /** LSH band keys: group the signature into bands of `rows` values, hash
-    * each band. Returns array of (band_index, band_hash) structs.
-    */
-  def minhashBands(sig: Column, k: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(k / rows - 1)), b =>
-      struct(b.as("band"),
-        md5(concat_ws(",", slice(sig, b * rows + 1, lit(rows))))
-          .as("band_hash")))
-
-  /** Jaccard similarity of two string arrays (as sets): single integer
-    * division -> deterministic across engines.
-    */
-  def jaccard(a: Column, b: Column): Column =
-    bind(array_distinct(a)) { ad =>
-      bind(array_distinct(b)) { bd =>
-        val inter = size(array_intersect(ad, bd)).cast("double")
-        val uni = size(array_union(ad, bd)).cast("double")
-        when(uni === 0.0, 0.0).otherwise(inter / uni)
-      }
-    }
-
-  /** Hex nibble value (0..15) at 1-based position `pos` of md5(s). */
-  private def nib(s: Column, pos: Column): Column =
-    conv(md5(s).substr(pos, lit(1)), 16, 10).cast("int")
-
-  /** SimHash over word tokens as a `bits`-char '0'/'1' string (MSB-first
-    * per nibble). bit j of token t = bit (3 - j%4) of hex nibble (j/4) of
-    * md5(t); simhash bit = majority vote (sum of +-1 > 0).
-    */
-  def simhash(toksExpr: Column, bits: Int): Column = {
-    require(bits % 4 == 0 && bits <= 128)
-    bind(toksExpr) { toks =>
-      val bitCols = (0 until bits).map { j =>
-        val nibIdx = j / 4 + 1 // 1-based hex position
-        val shift = 3 - (j % 4) // MSB-first within nibble
-        val div = 1 << shift
-        val vote = aggregate(toks, lit(0),
-          (acc, t) => acc + ((nib(t, lit(nibIdx)) / div).cast("int") % 2) * 2 - 1)
-        when(vote > 0, "1").otherwise("0")
-      }
-      concat(bitCols: _*)
-    }
-  }
-
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingBits(a: Column, b: Column, bits: Int): Column =
-    aggregate(sequence(lit(1), lit(bits)), lit(0), (acc, i) =>
-      acc + when(a.substr(i, lit(1)) =!= b.substr(i, lit(1)), 1).otherwise(0))
-
-  /** OpenRefine-style fingerprint: md5 of space-joined sorted distinct
-    * tokens. Word-order and duplication invariant.
-    */
-  def fingerprint(text: Column): Column =
-    md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
-
-  /** Rolling content hash per fixed-size token window (document segment
-    * fingerprinting); returns array of window md5s.
-    */
-  def windowFingerprints(text: Column, window: Int): Column =
-    bind(tokens(text)) { t =>
-      when(size(t) < window, array(md5(concat_ws(" ", t))))
-        .otherwise(transform(sequence(lit(0), size(t) - window), i =>
-          md5(concat_ws(" ",
-            slice(t, i + 1, lit(window))))))
-    }
 
   // --- language ID (marker-token heuristic) ---------------------------
 
@@ -141,78 +63,9 @@ object TextFunctions {
           size(toks).cast("double"))
     }
 
-  /** Predicted language: argmax marker score; ties favor the
-    * alphabetically-earliest language (fold order is alphabetical and
-    * replacement requires strictly greater score); all-zero scores ->
-    * "und".
-    */
-  def langId(text: Column): Column = bind(tokens(text)) { toks =>
-    val init = struct(lit(0.0).as("score"), lit("und").as("lang"))
-    langMarkers.foldLeft(init: Column) { case (best, (lang, markers)) =>
-      val s = langScore(toks, markers)
-      when(s > best.getField("score"),
-        struct(s.as("score"), lit(lang).as("lang"))).otherwise(best)
-    }.getField("lang")
-  }
-
   // --- quality scoring ------------------------------------------------
 
   val qualityStopwords: Seq[String] = langMarkers.toMap.apply("en")
-
-  /** Heuristic quality features; every ratio is one integer-count
-    * division.
-    */
-  def qualityFeatures(text: Column): Seq[(String, Column)] = {
-    val nChars = length(text)
-    val alphaChars = length(regexp_replace(lower(text), "[^a-z]", ""))
-    val digitChars = length(regexp_replace(text, "[^0-9]", ""))
-    val punctChars = length(regexp_replace(text, "[a-zA-Z0-9\\s]", ""))
-    val stopArr = array(qualityStopwords.map(lit): _*)
-    val meanTokLen = bind(tokens(text)) { toks =>
-      when(size(toks) === 0, 0.0).otherwise(
-        aggregate(toks, lit(0), (acc, t) => acc + length(t)).cast("double") /
-          size(toks).cast("double"))
-    }
-    val stopRatio = bind(tokens(text)) { toks =>
-      when(size(toks) === 0, 0.0).otherwise(
-        size(filter(toks, t => array_contains(stopArr, t))).cast("double") /
-          size(toks).cast("double"))
-    }
-    Seq(
-      "n_chars" -> nChars,
-      "n_tokens" -> size(tokens(text)),
-      "mean_token_len" -> meanTokLen,
-      "alpha_ratio" -> safeRatio(alphaChars, nChars),
-      "digit_ratio" -> safeRatio(digitChars, nChars),
-      "punct_ratio" -> safeRatio(punctChars, nChars),
-      "stopword_ratio" -> stopRatio)
-  }
-
-  private def safeRatio(num: Column, den: Column): Column =
-    when(den === 0, 0.0).otherwise(num.cast("double") / den.cast("double"))
-
-  /** Composite quality score in [0,1]: rewards mid-length docs with high
-    * alpha ratio and some stopwords, penalizes digit/punct noise.
-    */
-  def qualityScore(text: Column): Column = {
-    val f = qualityFeatures(text).toMap
-    val lengthTerm = least(f("n_tokens").cast("double") / 100.0, lit(1.0))
-    val score = lit(0.25) * lengthTerm +
-      lit(0.35) * f("alpha_ratio") +
-      lit(0.25) * least(f("stopword_ratio") * 5.0, lit(1.0)) +
-      lit(0.15) * (lit(1.0) - least(f("digit_ratio") * 5.0, lit(1.0)))
-    least(greatest(score, lit(0.0)), lit(1.0))
-  }
-
-  /** Whitespace token count + BPE-ish sub-token count ([a-z]+ runs,
-    * single digits, single punctuation marks -- a deterministic proxy for
-    * tokenizer cost accounting).
-    */
-  def whitespaceTokenCount(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => length(t) > 0))
-
-  def bpeishTokenCount(text: Column): Column =
-    regexp_count(lower(text), lit("[a-z]+|[0-9]|[^a-z0-9\\s]"))
 
   // --- PII redaction ---------------------------------------------------
   // Standard training-corpus scrubbing (the C4/RefinedWeb-style pass):
@@ -229,65 +82,6 @@ object TextFunctions {
   val piiIpPattern = "\\b(\\d{1,3}\\.){3}\\d{1,3}\\b"
   val piiNumPattern = "\\b\\d{7,}\\b"
 
-  def redactPii(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, piiEmailPattern, "<EMAIL>"),
-        piiIpPattern, "<IP>"),
-      piiNumPattern, "<NUM>")
-
-  // the same three patterns pre-compiled for the UDF form below —
-  // java.util.regex is ALSO the engine behind regexp_replace, so the
-  // outputs are bit-identical; the UDF just pays ONE UTF8String <->
-  // String round trip instead of three
-  private lazy val piiEmailRe = java.util.regex.Pattern.compile(piiEmailPattern)
-  private lazy val piiIpRe = java.util.regex.Pattern.compile(piiIpPattern)
-  private lazy val piiNumRe = java.util.regex.Pattern.compile(piiNumPattern)
-
-  /** Compiled [[redactPii]]: the identical three replaceAll passes in
-    * one kernel (parity spec in LlmOpsSpec; same regex engine).
-    */
-  val redactPiiUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf((s: String) =>
-      if (s == null) null
-      else piiNumRe.matcher(
-        piiIpRe.matcher(
-          piiEmailRe.matcher(s).replaceAll("<EMAIL>"))
-          .replaceAll("<IP>"))
-        .replaceAll("<NUM>"))
-
-  /** Match count for one PII pattern (null text counts 0). */
-  def piiMatches(text: Column, pattern: String): Column =
-    size(regexp_extract_all(coalesce(text, lit("")), lit(pattern),
-      lit(0))).cast("long")
-
-  /** Total matches across the three pattern classes, counted on the
-    * raw text independently (an email's digits are NOT double-counted
-    * by the digit-run rule only when they are under 7 digits; the
-    * counts are a density SIGNAL, not a disjoint partition — same
-    * counting the redaction gate reports).
-    */
-  def piiTotal(text: Column): Column =
-    piiMatches(text, piiEmailPattern) + piiMatches(text, piiIpPattern) +
-      piiMatches(text, piiNumPattern)
-
-  /** Compiled [[piiTotal]]: the same three java.util.regex patterns,
-    * counted with one find() loop each over ONE decoded String —
-    * identical counts (regexp_extract_all collects successive find()
-    * matches of the same engine); null counts 0 like the coalesce in
-    * [[piiMatches]].
-    */
-  val piiTotalUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf((s: String) =>
-      if (s == null) 0L
-      else {
-        var n = 0L
-        val m1 = piiEmailRe.matcher(s); while (m1.find()) n += 1
-        val m2 = piiIpRe.matcher(s); while (m2.find()) n += 1
-        val m3 = piiNumRe.matcher(s); while (m3.find()) n += 1
-        n
-      })
-
   /** Density-based curation cut: keep documents with at most
     * `maxPerKiloChars` PII matches per 1000 characters. Integer
     * cross-multiply (`total * 1000 <= max * length`), so the cut is
@@ -302,35 +96,11 @@ object TextFunctions {
       lit(maxPerKiloChars.toLong) * length(coalesce(col(textCol),
         lit(""))).cast("long"))
 
-  // --- feature-hashed linear classifier --------------------------------
-  // The fastText-style quality/domain classifier shape: hash each token
-  // into one of `dims` buckets, score = mean bucket weight. Weights here
-  // are md5-derived (a stand-in for trained parameters -- the SHAPE is
-  // what scales: per-token hashing is map-side, no vocabulary join, no
-  // shuffle), and integer until the final division so any SQL oracle
-  // reproduces the score bit-for-bit.
+  // --- md5-derived integers ---------------------------------------------
+  // Buckets, sketch slots and classifier weights all derive from the
+  // first 8 hex chars of an md5, so any SQL oracle reproduces them.
 
   /** First-8-hex-chars-of-md5 as an unsigned 32-bit integer column. */
   def hex8(e: Column): Column =
     conv(md5(e).substr(1, 8), 16, 10).cast("long")
-
-  /** Feature-hash bucket in [0, dims). */
-  def hashBucket(tok: Column, dims: Int): Column =
-    hex8(tok) % dims
-
-  /** Integer weight in [-1000, 1000] for a bucket under `seed`
-    * (divide by 1000.0 for the real-valued weight).
-    */
-  def bucketWeight(bucket: Column, seed: String): Column =
-    hex8(concat(lit(seed + ":"), bucket.cast("string"))) % 2001 - 1000
-
-  /** Sum of per-token bucket weights (exact integer; the classifier's
-    * pre-activation times 1000 * n_tokens ... i.e. score =
-    * weightSum / (1000 * n)).
-    */
-  def hashedWeightSum(toksExpr: Column, dims: Int, seed: String): Column =
-    bind(toksExpr) { toks =>
-      aggregate(toks, lit(0L),
-        (acc, t) => acc + bucketWeight(hashBucket(t, dims), seed))
-    }
 }

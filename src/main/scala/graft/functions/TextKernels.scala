@@ -230,10 +230,11 @@ object MinhashBandKeys {
 
 /** Quality counts over a string column as a native expression: the
   * single-pass (alpha, digit, punct, nTokens, sumTokLen, stopHits)
-  * scan of TextAnalysis.qualityCountsUdf with the UTF8String →
+  * scan of TextAnalysis.qualityCountsOf with the UTF8String →
   * String transcode removed for all-ASCII rows. Field names, values
   * and NULL behavior (null text → null struct) are identical to the
-  * retained UDF — spec-asserted in LlmOpsSpec.
+  * UDF it replaced (the test-scope parity reference) — spec-asserted in
+  * LlmOpsSpec and KernelParityPropertySpec.
   */
 case class QualityCountsExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -310,7 +311,7 @@ object QualityCountsExpr {
 
   /** One-pass ASCII counts, or null when a non-ASCII byte appears
     * (caller falls back to the String kernel). Byte-identical to
-    * qualityCountsUdf for pure-ASCII text: digit/punct classify the
+    * qualityCountsOf for pure-ASCII text: digit/punct classify the
     * ORIGINAL codepoints (== bytes here), alpha/tokens/stops the
     * lowercased text (ASCII lowercase == String.toLowerCase here).
     */

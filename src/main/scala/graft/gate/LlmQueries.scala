@@ -934,12 +934,14 @@ object LlmQueries {
         "id_a", "id_b", iters = 3, dampingMilli = 850)
         .select(col("id").as("doc_id"), col("rank_micro"))),
 
-    // 16-bit SimHash per document (compiled UDF, byte-equal to the
-    // TextFunctions.simhash column expression -- LlmOpsSpec asserts it).
+    // 16-bit SimHash per document through the packed-LONG kernel
+    // simhashPairs runs, rendered as the '0'/'1' string (bit 15 first;
+    // LlmOpsSpec pins it to the column-expression reference).
     "llm_simhash" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
-          Dedup.simhashUdfFor(16)(tokens(col("text"))).as("simhash16"))),
+          lpad(bin(Dedup.simhashTextLongUdf(16)(col("text"))), 16, "0")
+            .as("simhash16"))),
 
     // Language ID scores + argmax prediction.
     "llm_langid" -> ((s, d) => {

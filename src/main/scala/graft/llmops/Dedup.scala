@@ -70,13 +70,6 @@ object Dedup {
           .partitionBy("content_hash").orderBy(col(idCol))))
       .where(col("__rn") === 1).drop("__rn", "content_hash")
 
-  /** Compiled per-row minhash band keys: k seeded md5-min signature ->
-    * bandRows-grouped band hashes, in one tight loop with a reused
-    * MessageDigest. Entirely MAP-SIDE -- nothing shuffles until the
-    * band-key candidate join, which is the shape that scales to 100 TB.
-    * Byte-identical to the column-expression primitives in TextFunctions
-    * (same md5 hex strings, same lexicographic mins).
-    */
   /** Compiled n-gram shingler: word windows of the shared compiled
     * tokenizer, space-joined — byte-equal to
     * `shingles(tokens(text), n)` (fewer than n tokens → EMPTY; null
@@ -148,82 +141,6 @@ object Dedup {
       udf((s: String) => shingleArr(s, nn).toSeq)
     })
 
-  private val bandKeysUdfCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int),
-      org.apache.spark.sql.expressions.UserDefinedFunction]()
-
-  /** Parity reference for [[graft.functions.MinhashBandKeys]] (the
-    * native expression the scan now runs through) — LlmOpsSpec asserts
-    * column-level equality including unicode/empty/null rows.
-    */
-  private[graft] def bandKeysUdf(shingleN: Int, k: Int, bandRows: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    bandKeysUdfCache.computeIfAbsent((shingleN, k, bandRows), { key =>
-      val f = bandKeysF(key._2, key._3)
-      udf((text: String) => {
-        val sh = shingleArr(text, key._1)
-        // no shingles -> no bands (the old pre-UDF size filter)
-        if (sh.isEmpty) Seq.empty[String] else f(sh)
-      })
-    })
-
-  private def bandKeysF(k: Int, bandRows: Int): Seq[String] => Seq[String] = {
-    (sh: Seq[String]) => {
-      // This loop is THE dominant compute of the dedup pipeline (k x
-      // shingles digests per document; 69% of the 16M crawl run's
-      // wall), so it avoids every repeatable allocation while keeping
-      // the output byte-identical to hex(md5(seed + ":" + shingle)):
-      //  - shingle UTF-8 bytes encode ONCE, not once per seed;
-      //  - the per-seed minimum compares raw digests UNSIGNED, which
-      //    orders exactly like the hex strings (the nibble->char map
-      //    is monotone), so only the k winners ever hex-render.
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hexd = "0123456789abcdef"
-      def hexOf(d: Array[Byte]): String = {
-        val out = new Array[Char](32)
-        var i = 0
-        while (i < 16) {
-          out(2 * i) = hexd((d(i) >> 4) & 0xf)
-          out(2 * i + 1) = hexd(d(i) & 0xf)
-          i += 1
-        }
-        new String(out)
-      }
-      def lessUnsigned(a: Array[Byte], b: Array[Byte]): Boolean = {
-        var i = 0
-        while (i < 16) {
-          val ai = a(i) & 0xff; val bi = b(i) & 0xff
-          if (ai != bi) return ai < bi
-          i += 1
-        }
-        false
-      }
-      val shBytes = new Array[Array[Byte]](sh.length)
-      var j = 0
-      sh.foreach { x => shBytes(j) = x.getBytes("UTF-8"); j += 1 }
-      val sig = new Array[String](k)
-      var s = 0
-      while (s < k) {
-        val prefix = (s.toString + ":").getBytes("UTF-8")
-        var m: Array[Byte] = null
-        var i = 0
-        while (i < shBytes.length) {
-          md.update(prefix)
-          md.update(shBytes(i))
-          val h = md.digest()
-          if (m == null || lessUnsigned(h, m)) m = h
-          i += 1
-        }
-        sig(s) = hexOf(m)
-        s += 1
-      }
-      (0 until k / bandRows).map { b =>
-        hexOf(md.digest(sig.slice(b * bandRows, b * bandRows + bandRows)
-          .mkString(",").getBytes("UTF-8")))
-      }
-    }
-  }
-
   /** MinHash LSH band keys. Returns (id, band, band_hash); docs with no
     * shingles have no bands.
     */
@@ -244,7 +161,7 @@ object Dedup {
     // row's UTF8String bytes (r20 — no per-row String transcode; the
     // empty-shingle handling lives inside the kernel: empty -> no
     // bands, so posexplode drops the row exactly like the old size()
-    // pre-filter; bandKeysUdf stays as the parity reference)
+    // pre-filter)
     spread.select(col("id"),
       posexplode(graft.functions.MinhashBandKeys(col("__text"),
         shingleN, k, bandRows)).as(Seq("band", "band_hash")))
@@ -442,114 +359,19 @@ object Dedup {
         sum("jaccard_micro").as("jaccard_micro_sum"))
   }
 
-  /** Compiled set-Jaccard (same integer-count division as
-    * TextFunctions.jaccard; HashSet instead of per-pair array HOFs).
-    * Kept as the independent parity reference for the codegen
-    * [[graft.functions.JaccardSimilarity]] expression the hot verify
-    * paths now use (LlmOpsSpec asserts equality on random inputs).
-    */
-  val jaccardUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: Seq[String], b: Seq[String]) => {
-      val sa = a.toSet
-      val sb = b.toSet
-      val inter = sa.count(sb.contains)
-      val uni = sa.size + sb.size - inter
-      if (uni == 0) 0.0 else inter.toDouble / uni.toDouble
-    })
-
-  /** Compiled simhash: byte-identical to TextFunctions.simhash (bit j of
-    * token t = bit (3 - j%4) of hex nibble j/4 of md5(t); majority
-    * vote), in one digest per token instead of a per-(token, bit) HOF
-    * walk -- the scan-side cost drops ~bits-fold.
-    */
-  def simhashUdfFor(bits: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    // same guard as the column-expression simhash this replaces: bits
-    // beyond 128 would index past the 16-byte md5 digest inside executor
-    // tasks (ArrayIndexOutOfBounds mid-job instead of a clear error here).
-    require(bits > 0 && bits % 4 == 0 && bits <= 128,
-      s"bits must be a positive multiple of 4 <= 128, got $bits")
-    udf((toks: Seq[String]) => {
-      // one digest per token OCCURRENCE (r22: the r21 count-weighted
-      // form — HashMap distinct-count, digest × count votes — lost the
-      // same-host gate A/B 9–19% on every simhash gate: this corpus's
-      // per-doc token repetition is too low to amortize the map)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val votes = new Array[Int](bits)
-      toks.foreach { t =>
-        val d = md.digest(t.getBytes("UTF-8"))
-        var j = 0
-        while (j < bits) {
-          val nibIdx = j / 4
-          val nib = (d(nibIdx / 2) >> (4 * (1 - nibIdx % 2))) & 0xf
-          votes(j) += (((nib >> (3 - j % 4)) & 1) * 2) - 1
-          j += 1
-        }
-      }
-      val out = new Array[Char](bits)
-      var j = 0
-      while (j < bits) {
-        out(j) = if (votes(j) > 0) '1' else '0'
-        j += 1
-      }
-      new String(out)
-    })
-  }
-
-  // memoized text-level simhash: tokenize INSIDE the pass (the
-  // interpreted tokens() HOF was most of the scan's cost at crawl
-  // scale) and keep the UDF a single instance per bits so rebuilt
-  // plans stay plan-cache substitutable
-  private val simhashTextUdfCache =
-    new java.util.concurrent.ConcurrentHashMap[Int,
-      org.apache.spark.sql.expressions.UserDefinedFunction]()
-
-  /** [[simhashUdfFor]] from the raw TEXT (shared compiled tokenizer);
-    * same bit string for the same document.
-    */
-  def simhashTextUdf(bits: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    require(bits > 0 && bits % 4 == 0 && bits <= 128,
-      s"bits must be a positive multiple of 4 <= 128, got $bits")
-    simhashTextUdfCache.computeIfAbsent(bits, { b =>
-      udf((text: String) => {
-        val toks =
-          if (text == null) Array.empty[String]
-          else TextAnalysis.alnumTokens(text)
-        // one digest per token occurrence (r22 revert — see
-        // [[simhashUdfFor]]: count-weighting lost the gate A/B here)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val votes = new Array[Int](b)
-        var i = 0
-        while (i < toks.length) {
-          val d = md.digest(toks(i).getBytes("UTF-8"))
-          var j = 0
-          while (j < b) {
-            val nibIdx = j / 4
-            val nib = (d(nibIdx / 2) >> (4 * (1 - nibIdx % 2))) & 0xf
-            votes(j) += (((nib >> (3 - j % 4)) & 1) * 2) - 1
-            j += 1
-          }
-          i += 1
-        }
-        val out = new Array[Char](b)
-        var j = 0
-        while (j < b) {
-          out(j) = if (votes(j) > 0) '1' else '0'
-          j += 1
-        }
-        new String(out)
-      })
-    })
-  }
-
   private val simhashLongUdfCache =
     new java.util.concurrent.ConcurrentHashMap[Int,
       org.apache.spark.sql.expressions.UserDefinedFunction]()
 
-  /** [[simhashTextUdf]] packed into a LONG (r22): bit (bits-1-j) of the
-    * result == char j of the string form ('1' ↔ set), so any consumer
-    * that only compares, buckets or xors signatures can carry 8 bytes
-    * instead of `bits` chars. Same votes, same tokenizer; bits <= 64.
+  /** Compiled simhash of the raw TEXT, packed into a LONG: bit j of
+    * token t = bit (3 - j%4) of hex nibble j/4 of md5(t), simhash bit =
+    * majority vote, and bit (bits-1-j) of the result is bit j of the
+    * '0'/'1' string form (render it with `lpad(bin(sh), bits, '0')`).
+    * One digest per token instead of a per-(token, bit) HOF walk, and
+    * tokenized INSIDE the pass by the shared compiled tokenizer (the
+    * interpreted tokens() HOF was most of the scan's cost at crawl
+    * scale). Memoized per bits so rebuilt plans stay plan-cache
+    * substitutable. bits <= 64.
     */
   def simhashTextLongUdf(bits: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -557,9 +379,11 @@ object Dedup {
       s"bits must be a positive multiple of 4 <= 64, got $bits")
     simhashLongUdfCache.computeIfAbsent(bits, { b =>
       udf((text: String) => {
-        val toks =
-          if (text == null) Array.empty[String]
-          else TextAnalysis.alnumTokens(text)
+        val toks = TextAnalysis.alnumTokens(text)
+        // one digest per token OCCURRENCE (r22: the r21 count-weighted
+        // form — HashMap distinct-count, digest × count votes — lost the
+        // same-host gate A/B 9–19% on every simhash gate: this corpus's
+        // per-doc token repetition is too low to amortize the map)
         val md = java.security.MessageDigest.getInstance("MD5")
         val votes = new Array[Int](b)
         var i = 0
@@ -609,6 +433,9 @@ object Dedup {
     // the LONG representation below caps the operator at 64 bits — no
     // caller exceeds the word2vec-conventional 64 (the gate uses 16)
     require(bits <= 64, s"simhashPairs supports bits <= 64, got $bits")
+    require(bits > 0 && bandBits > 0 && bits % bandBits == 0,
+      s"bandBits must be positive and divide bits, got bits=$bits " +
+        s"bandBits=$bandBits")
     // scoped-persisted: the simhash-UDF corpus scan (one md5 per token)
     // has multiple consumers -- both self-join sides plus the capped
     // path's bucket-population aggregate -- and exchange reuse cannot
@@ -664,29 +491,12 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
       // xor + popcount over the LONG signatures (r22): equals the
       // per-char diff count of the '0'/'1' strings bit-for-bit, inside
-      // whole-stage codegen (bit_count returns INT like the former
-      // HammingDistance expression, which remains for string callers)
+      // whole-stage codegen (bit_count returns INT)
       .withColumn("hamming",
         expr("bit_count(sh_a ^ sh_b)"))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }
-
-  /** Compiled bit-string hamming distance (same values as
-    * TextFunctions.hammingBits; candidate sets can reach millions of
-    * pairs, where the per-position HOF is ~60x slower). Kept as the
-    * independent parity reference for the codegen
-    * [[graft.functions.HammingDistance]] expression the verify path
-    * now uses.
-    */
-  val hammingUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: String, b: String) => {
-      var d = 0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { if (a.charAt(i) != b.charAt(i)) d += 1; i += 1 }
-      d
-    })
 
   /** Exact n-gram Jaccard pairs (every pair with J >= threshold) via
     * PREFIX FILTERING (the SSJoin/PPJoin family, public literature):
@@ -869,17 +679,6 @@ object Dedup {
         coalesce(col("__d"), lit(false)).as("semantic_dup"))
   }
 
-  /** Exact-substring duplication pairs: docs sharing >= minShared
-    * distinct `window`-token rolling-hash fingerprints. The distributed
-    * analog of suffix-array substring dedup from the published
-    * training-data literature ("docs sharing any 50-token span are
-    * duplicates"): a shared window hash IS a shared exact token span
-    * (md5 collisions aside), and the fingerprints are the ONLY thing
-    * shuffled -- 16 bytes per window, never the text. Scale shape: one
-    * explode + a key-partitioned self-join on the window hash + a pair
-    * groupBy; hot hashes (boilerplate spans) are the skew risk, so the
-    * join key is the hash itself and AQE's skew-split applies.
-    */
   // --- shared window-fingerprint core (r21) --------------------------
   private val HexDigits = "0123456789abcdef".toCharArray
 
@@ -902,9 +701,10 @@ object Dedup {
     * replaces the per-window slice + mkString + getBytes allocations
     * that dominated this scan family's wall (every window re-copied
     * `window` tokens); digests are byte-identical by construction and
-    * LlmOpsSpec pins equality with the column-expression form.
+    * LlmOpsSpec pins equality with the column-expression reference.
+    * The k-gram hashes [[winnowedFingerprints]] selects from.
     */
-  private[llmops] def windowHexes(toks: Array[String],
+  private[graft] def windowHexes(toks: Array[String],
       window: Int): Array[String] =
     windowDigests(toks, window).map(hexOf)
 
@@ -951,41 +751,16 @@ object Dedup {
     }
   }
 
-  /** Compiled rolling-window fingerprints: byte-equal to
-    * TextFunctions.windowFingerprints (md5 hex of each space-joined
-    * `window`-token slice; short docs -> one whole-doc hash), via the
-    * joined-buffer [[windowHexes]] core.
-    */
-  def windowFingerprintsUdf(window: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) =>
-      windowHexes(TextAnalysis.alnumTokens(text), window).toSeq)
-
-  /** [[windowFingerprintsUdf]] deduplicated INSIDE the pass in first-
-    * occurrence order — exactly `array_distinct(windowFingerprintsUdf)`
-    * without the second interpreted array walk. The per-doc distinct
-    * frame is what every fingerprint self-join consumes.
-    */
-  def distinctWindowFingerprintsUdf(window: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => {
-      val hs = windowHexes(TextAnalysis.alnumTokens(text), window)
-      val seen = new java.util.HashSet[String](hs.length * 2)
-      val out = new scala.collection.mutable.ArrayBuffer[String](hs.length)
-      var i = 0
-      while (i < hs.length) {
-        if (seen.add(hs(i))) out += hs(i)
-        i += 1
-      }
-      out.toSeq
-    })
-
-  /** [[distinctWindowFingerprintsUdf]] emitting RAW 16-byte digests
-    * (r22): the form the fingerprint self-joins consume — the hashes
-    * never leave the plan, so the hex encode and half the shuffle/cache
-    * bytes disappear. Same first-occurrence order, same distinct set
-    * (hex ⇄ bytes bijection).
+  /** Distinct raw 16-byte digests of every `window`-token rolling
+    * window, deduplicated INSIDE the pass in first-occurrence order
+    * (`array_distinct` of the window fingerprints without a second
+    * array walk). The form every fingerprint self-join consumes: the
+    * hashes never leave the plan, so they travel as 16 bytes instead of
+    * a 32-char hex string (r22). Null text has no fingerprints (a null
+    * array, which explode drops).
     */
   def distinctWindowFingerprintBytesUdf(window: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => {
+    udf((text: String) => if (text == null) None else Some {
       val hs = windowDigests(TextAnalysis.alnumTokens(text), window)
       val seen = new java.util.HashSet[java.nio.ByteBuffer](hs.length * 2)
       val out =
@@ -1029,6 +804,17 @@ object Dedup {
     wf.join(broadcast(hot), Seq("wh"), "left_anti")
   }
 
+  /** Exact-substring duplication pairs: docs sharing >= minShared
+    * distinct `window`-token rolling-hash fingerprints. The distributed
+    * analog of suffix-array substring dedup from the published
+    * training-data literature ("docs sharing any 50-token span are
+    * duplicates"): a shared window hash IS a shared exact token span
+    * (md5 collisions aside), and the fingerprints are the ONLY thing
+    * shuffled -- 16 bytes per window, never the text. Scale shape: one
+    * explode + a key-partitioned self-join on the window hash + a pair
+    * groupBy; hot hashes (boilerplate spans) are the skew risk, so the
+    * join key is the hash itself and AQE's skew-split applies.
+    */
   def substringDupPairs(df: DataFrame, idCol: String, textCol: String,
       window: Int = 20, minShared: Int = 1,
       maxDocFreq: Int = 1000): DataFrame = {
@@ -1049,36 +835,15 @@ object Dedup {
       .where(col("shared_windows") >= minShared)
   }
 
-  /** Compiled (first position, fingerprint) pairs: same hashes as
-    * [[windowFingerprintsUdf]], each DISTINCT hash emitted once with the
-    * 0-based TOKEN index of its first window -- the span-localization
-    * input. Deduping inside the UDF (ordered walk + seen set) makes the
-    * per-doc min-position a MAP-SIDE fact: no (id, hash) groupBy shuffle
-    * ever runs, and the output is exactly the distinct frame
-    * [[substringDupPairs]] joins on.
-    */
-  def windowFingerprintPositionsUdf(window: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => {
-      val toks = TextAnalysis.alnumTokens(text)
-      val hs = windowHexes(toks, window)
-      if (toks.length < window) Seq((0, hs(0)))
-      else {
-        val seen = new java.util.HashSet[String](hs.length * 2)
-        val out = new scala.collection.mutable.ArrayBuffer[(Int, String)]()
-        var i = 0
-        while (i < hs.length) {
-          if (seen.add(hs(i))) out += ((i, hs(i)))
-          i += 1
-        }
-        out.toSeq
-      }
-    })
-
-  /** [[windowFingerprintPositionsUdf]] with RAW 16-byte digests (r22 —
-    * see [[distinctWindowFingerprintBytesUdf]]).
+  /** (first position, digest) pairs: the digests of
+    * [[distinctWindowFingerprintBytesUdf]], each DISTINCT digest emitted
+    * once with the 0-based TOKEN index of its first window -- the
+    * span-localization input. Deduping inside the UDF (ordered walk +
+    * seen set) makes the per-doc min-position a MAP-SIDE fact: no (id,
+    * hash) groupBy shuffle ever runs. Null text has no fingerprints.
     */
   def windowFingerprintPositionBytesUdf(window: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => {
+    udf((text: String) => if (text == null) None else Some {
       val toks = TextAnalysis.alnumTokens(text)
       val hs = windowDigests(toks, window)
       if (toks.length < window) Seq((0, hs(0)))
@@ -1151,9 +916,9 @@ object Dedup {
     val cuts = spans.select(col("id_b").as("id"), col("b_start").as("__s"))
       .distinct()
       .groupBy("id").agg(sort_array(collect_list(col("__s"))).as("__starts"))
+    // null text keeps its row: no tokens, nothing to cut
     val cutUdf = udf((text: String, starts: Seq[Long]) => {
-      val toks = text.toLowerCase(java.util.Locale.ROOT)
-        .split("[^a-z0-9]+").filter(_.nonEmpty)
+      val toks = TextAnalysis.alnumTokens(text)
       val ss = if (starts == null) Array.empty[Long] else starts.toArray
       val keep = toks.indices.filter(i =>
         !ss.exists(s => i >= s && i < s + window))
@@ -1535,10 +1300,11 @@ object Dedup {
     * downstream fingerprint self-joins ([[substringDupPairs]]-style)
     * shuffle ~2/(w+1) of the volume for a known detection floor.
     *
-    * Docs with fewer than k tokens contribute one whole-doc hash (same
-    * short-doc arm as [[graft.functions.TextFunctions.windowFingerprints]]);
-    * when fewer than w hashes exist the window shrinks to the hash count
-    * (one global window), so every non-empty doc keeps >= 1 fingerprint.
+    * Docs with fewer than k tokens contribute one whole-doc hash (the
+    * short-doc arm of [[windowHexes]]); when fewer than w hashes exist
+    * the window shrinks to the hash count (one global window), so every
+    * non-null doc keeps >= 1 fingerprint. Null text has none
+    * (n_kgrams = 0, empty fps).
     *
     * Scale shape: winnowing is a per-document LINEAR SCAN -- this runs
     * it inside one compiled UDF (the repo's standard for md5-heavy
@@ -1555,26 +1321,28 @@ object Dedup {
   def winnowedFingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
-    val winnowUdf = udf((text: String) => {
-      // k-gram hashes via the joined-buffer core (byte-identical; the
-      // short-doc branch is windowHexes' own `n < window` path)
-      val hs = windowHexes(TextAnalysis.alnumTokens(text), k)
-      val weff = math.min(w, hs.length)
-      val sel = scala.collection.mutable.ArrayBuffer.empty[WinnowFp]
-      var q = 0
-      while (q <= hs.length - weff) {
-        var best = q
-        var j = q + 1
-        while (j < q + weff) {
-          if (hs(j) <= hs(best)) best = j // rightmost min on ties
-          j += 1
+    val winnowUdf = udf((text: String) =>
+      if (text == null) WinnowDoc(0L, Seq.empty)
+      else {
+        // k-gram hashes via the joined-buffer core (byte-identical; the
+        // short-doc branch is windowHexes' own `n < window` path)
+        val hs = windowHexes(TextAnalysis.alnumTokens(text), k)
+        val weff = math.min(w, hs.length)
+        val sel = scala.collection.mutable.ArrayBuffer.empty[WinnowFp]
+        var q = 0
+        while (q <= hs.length - weff) {
+          var best = q
+          var j = q + 1
+          while (j < q + weff) {
+            if (hs(j) <= hs(best)) best = j // rightmost min on ties
+            j += 1
+          }
+          if (sel.isEmpty || sel.last.p != best.toLong)
+            sel += WinnowFp(best.toLong, hs(best))
+          q += 1
         }
-        if (sel.isEmpty || sel.last.p != best.toLong)
-          sel += WinnowFp(best.toLong, hs(best))
-        q += 1
-      }
-      WinnowDoc(hs.length.toLong, sel.toSeq)
-    })
+        WinnowDoc(hs.length.toLong, sel.toSeq)
+      })
     df.select(col(idCol), winnowUdf(col(textCol)).as("__w"))
       .select(col(idCol), col("__w.n_kgrams").as("n_kgrams"),
         col("__w.fps").as("fps"))

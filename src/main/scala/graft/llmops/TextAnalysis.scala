@@ -16,9 +16,11 @@ object TextAnalysis {
     * (`split(lower(text), "[^a-z0-9]+")` + empty filter), one char walk
     * instead of an interpreted regex split per consumer. Every
     * compiled scan UDF in this file tokenizes through here, and the
-    * LlmOpsSpec parity tests pin the equivalence.
+    * LlmOpsSpec parity tests pin the equivalence. Null text has no
+    * tokens.
     */
   private[graft] def alnumTokens(s: String): Array[String] = {
+    if (s == null) return Array.empty
     // Locale.ROOT (ADVICE r20): a Turkish/Azeri default locale lowers
     // 'I' to U+0131, which would diverge from the ASCII byte kernels
     // (TextKernels.asciiShingleBytes) and make band keys locale-dependent
@@ -51,10 +53,10 @@ object TextAnalysis {
   /** Compiled language ID: one tokenize + one marker-set lookup per
     * token per language, replacing the interpreted per-language
     * filter/array_contains HOF walk (58 s -> ~4 s for 2M docs,
-    * tools/ScanProf). Decision rule is a bit-replica of
-    * [[graft.functions.TextFunctions.langId]]: score = hits/n as one
-    * double division, fold in langMarkers order, replacement requires
-    * STRICTLY greater, zero scores -> "und".
+    * tools/ScanProf). Decision rule is a bit-replica of the
+    * column-expression langId (test-scope reference): score = hits/n as
+    * one double division, fold in langMarkers order, replacement
+    * requires STRICTLY greater, zero scores -> "und".
     */
   val langIdUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((s: String) => if (s == null) "und" else {
@@ -87,7 +89,8 @@ object TextAnalysis {
     * interpreted higher-order function: the r19 profile measured the
     * old `withQuality` at 484 s for 2M docs, 99% of the curate
     * runner's wall; this struct costs one char scan). Semantics are
-    * bit-replicas of [[graft.functions.TextFunctions.qualityFeatures]]:
+    * bit-replicas of the column-expression `qualityFeatures` (the
+    * test-scope parity reference):
     *
     *  - `alpha`     = count of a-z UTF-16 units in `text.toLowerCase`
     *                  (= length of regexp_replace(lower, "[^a-z]", ""))
@@ -98,18 +101,17 @@ object TextAnalysis {
     *    runs of the lowered text (the TextFunctions.tokens split),
     *    stop-matching against [[TextFunctions.qualityStopwords]]
     *
-    * LlmOpsSpec asserts column-level equality against the old
-    * expression form (incl. unicode/empty/null rows), and every
-    * quality gate hash-matches its DuckDB oracle unchanged.
+    * LlmOpsSpec and KernelParityPropertySpec assert column-level
+    * equality against the expression form (incl. unicode/empty/null
+    * rows), and every quality gate hash-matches its DuckDB oracle.
     */
   final case class QualityCounts(alpha: Int, digit: Int, punct: Int,
       nTokens: Int, sumTokLen: Int, stopHits: Int)
 
   private val qualityStopSet: Set[String] = qualityStopwords.toSet
 
-  /** The String-level counts kernel — shared by [[qualityCountsUdf]]
-    * (the parity reference) and the non-ASCII fallback of the native
-    * [[graft.functions.QualityCountsExpr]].
+  /** The String-level counts kernel: the non-ASCII fallback of the
+    * native [[graft.functions.QualityCountsExpr]].
     */
   private[graft] def qualityCountsOf(s: String): QualityCounts = {
     var digit = 0; var punct = 0
@@ -142,21 +144,12 @@ object TextAnalysis {
     QualityCounts(alpha, digit, punct, nTok, sumLen, stops)
   }
 
-  val qualityCountsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => if (s == null) None else Some(qualityCountsOf(s)))
-
-  /** Same columns, names, positions, and VALUES as the original
-    * expression form (`qualityFeatures` + `qualityScore` — kept in
-    * TextFunctions as the parity reference and for single-feature
-    * composition): the counts come from [[qualityCountsUdf]]'s one
-    * pass, the ratios and the score stay Column arithmetic with the
-    * exact original shape, so doubles are bit-identical.
-    */
-  /** The composite quality score from a [[qualityCountsUdf]] struct and
-    * the text's length column — the EXACT TextFunctions.qualityScore
+  /** The composite quality score from a
+    * [[graft.functions.QualityCountsExpr]] counts struct and the text's
+    * length column — the EXACT column-expression `qualityScore`
     * arithmetic over the compiled counts, factored out so every score
-    * consumer (withQuality, Curation.sourceStats) derives the
-    * identical double.
+    * consumer (withQuality, Curation.sourceStats) derives the identical
+    * double.
     */
   def qualityScoreFromCounts(qc: Column, nChars: Column): Column = {
     def ratio(num: Column): Column =
@@ -202,7 +195,7 @@ object TextAnalysis {
 
   /** Compiled token accounting, replacing two interpreted regex
     * passes (56 s -> ~3 s for 2M docs, tools/ScanProf). Bit-replicas
-    * of the TextFunctions column forms:
+    * of the column forms (test-scope parity references):
     *  - `ws` = maximal non-\s runs of the ORIGINAL text (Java \s =
     *    the 6 ASCII whitespace chars);
     *  - `bpe` = regexp_count(lower(text), "[a-z]+|[0-9]|[^a-z0-9\s]"):
@@ -254,9 +247,7 @@ object TextAnalysis {
     */
   val fingerprintUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((s: String) => {
-      val joined =
-        if (s == null) ""
-        else alnumTokens(s).distinct.sorted.mkString(" ")
+      val joined = alnumTokens(s).distinct.sorted.mkString(" ")
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(joined.getBytes("UTF-8"))
       val sb = new StringBuilder(32)
@@ -362,8 +353,8 @@ object TextAnalysis {
     * entries, so it precomputes ONCE in the closure (the expression
     * form re-derived md5(seed:bucket) per TOKEN — two interpreted
     * digests per token per doc); per token one digest + one lookup.
-    * Returns (weight_sum, n_tokens); same integers as
-    * hashedWeightSum + size(tokens).
+    * Returns (weight_sum, n_tokens); same integers as the column-form
+    * `hashedWeightSum` (test-scope reference) + size(tokens).
     */
   // memoized per (dims, seed): the UDF must be the SAME function
   // instance across query constructions, or two builds of the same

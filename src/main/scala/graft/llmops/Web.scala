@@ -475,7 +475,7 @@ object Web {
   def c4LineClean(df: DataFrame, idCol: String, textCol: String,
       minLineWords: Int = 5, minKeptLines: Int = 3): DataFrame = {
     // compiled single-pass kernel (r20) — the interpreted HOF form
-    // (retained below as c4LineCleanExpr, the parity reference) walked
+    // (now the test-scope parity reference in ReferenceKernels) walked
     // every line through per-element lambdas: 12.2 s -> ~1 s at 2M
     // docs (ScanProf). Values are identical by construction: ASCII
     // docs take a char-walk that matches the expression semantics
@@ -488,31 +488,6 @@ object Web {
       .withColumn("clean_text", col("__c4.cleanText"))
       .withColumn("c4_keep", col("__c4.keep"))
       .drop("__c4")
-  }
-
-  /** The original column-expression form of [[c4LineClean]] — kept as
-    * the parity reference (LlmOpsSpec asserts column-level equality
-    * on corpus + adversarial rows) and for single-rule composition.
-    */
-  private[graft] def c4LineCleanExpr(df: DataFrame, idCol: String,
-      textCol: String, minLineWords: Int = 5,
-      minKeptLines: Int = 3): DataFrame = {
-    val lines = split(col(textCol), "\n")
-    def lineKeep(l: Column): Column = {
-      val t = trim(l)
-      val words = size(filter(split(t, "\\s+"), w => w =!= ""))
-      t.substr(lit(-1), lit(1)).isin(".", "!", "?", "\"") &&
-        words >= minLineWords &&
-        !contains(lower(t), lit("javascript"))
-    }
-    val kept = filter(lines, lineKeep _)
-    df.withColumn("n_lines", size(lines).cast("long"))
-      .withColumn("kept_lines", size(kept).cast("long"))
-      .withColumn("clean_text", array_join(kept, "\n"))
-      .withColumn("c4_keep",
-        size(kept) >= minKeptLines &&
-          !contains(lower(col(textCol)), lit("lorem ipsum")) &&
-          !contains(col(textCol), lit("{")))
   }
 
   final case class C4Result(nLines: Long, keptLines: Long,

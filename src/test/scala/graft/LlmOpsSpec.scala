@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.llmops.{Ann, Dedup, Multimodal, TextAnalysis}
+import graft.ReferenceKernels._
 
 class LlmOpsSpec extends SparkSpec {
 
@@ -67,25 +68,6 @@ class LlmOpsSpec extends SparkSpec {
       4L -> false, 5L -> false))
   }
 
-  test("HammingDistance codegen expression == hammingUdf on random " +
-    "bit strings (incl. unequal lengths and the empty string)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    def bits(n: Int): String = Seq.fill(n)(rnd.nextInt(2)).mkString
-    val rows = Seq.fill(200)((bits(16), bits(16))) ++ Seq.fill(50)(
-      (bits(rnd.nextInt(20)), bits(rnd.nextInt(20)))) ++ Seq(
-      ("", ""), ("1", ""), ("0101", "0101"), ("1111", "0000"))
-    val got = rows.toDF("a", "b").select(
-      graft.functions.HammingDistance(col("a"), col("b")).as("e"),
-      Dedup.hammingUdf(col("a"), col("b")).as("u")).collect()
-    got.foreach(r => assert(r.getInt(0) === r.getInt(1)))
-    // interpreted path agrees too
-    val e = graft.functions.HammingDistance(
-      org.apache.spark.sql.catalyst.expressions.Literal("1010"),
-      org.apache.spark.sql.catalyst.expressions.Literal("1001"))
-    assert(e.eval(null) === 2)
-  }
-
   test("JaccardSimilarity codegen expression == jaccardUdf on random sets") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
@@ -99,7 +81,7 @@ class LlmOpsSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val got = df.select(
       graft.functions.JaccardSimilarity(col("a"), col("b")).as("e"),
-      Dedup.jaccardUdf(col("a"), col("b")).as("u")).collect()
+      jaccardUdf(col("a"), col("b")).as("u")).collect()
     got.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
     // interpreted path (eval, not codegen) agrees too
     val e = graft.functions.JaccardSimilarity(
@@ -132,7 +114,7 @@ class LlmOpsSpec extends SparkSpec {
     // counts: email local part with >=7 digits would ALSO match the
     // digit-run rule only if word-bounded; '@' breaks \b, documented
     val n = df.where(col("id") === "dense").select(
-      graft.functions.TextFunctions.piiTotal(col("t"))).head().getLong(0)
+      piiTotal(col("t"))).head().getLong(0)
     assert(n === 4L)
   }
 
@@ -414,7 +396,7 @@ class LlmOpsSpec extends SparkSpec {
     "to the expression form on corpus + adversarial rows") {
     import spark.implicits._
     // the old column-expression form (qualityFeatures + qualityScore,
-    // kept in TextFunctions as the parity reference) vs the r19
+    // the ReferenceKernels parity reference) vs the r19
     // single-pass UDF rewrite — every feature AND the float score must
     // match bit-for-bit, including unicode, empty, whitespace-only,
     // and null rows
@@ -521,7 +503,6 @@ class LlmOpsSpec extends SparkSpec {
   test("compiled PII kernels (redactPiiUdf / piiTotalUdf) equal the " +
     "regexp-chain forms (same java.util.regex engine, one transcode)") {
     import spark.implicits._
-    import graft.functions.TextFunctions._
     val weird = Seq(
       (9200001L, ""), (9200002L, null.asInstanceOf[String]),
       (9200003L, "mail a.b+c@x-y.co.uk or bad@@x..y and 10.0.0.254"),
@@ -569,7 +550,7 @@ class LlmOpsSpec extends SparkSpec {
     for ((mlw, mkl) <- Seq((5, 3), (3, 1))) {
       val neu = graft.llmops.Web.c4LineClean(base, "doc_id", "text",
         mlw, mkl).orderBy("doc_id").select("doc_id", cols: _*).collect()
-      val old = graft.llmops.Web.c4LineCleanExpr(base, "doc_id", "text",
+      val old = c4LineCleanExpr(base, "doc_id", "text",
         mlw, mkl).orderBy("doc_id").select("doc_id", cols: _*).collect()
       assert(neu.map(_.toSeq).toSeq == old.map(_.toSeq).toSeq,
         s"c4 parity broke at (minLineWords=$mlw, minKeptLines=$mkl)")
@@ -601,7 +582,7 @@ class LlmOpsSpec extends SparkSpec {
     for ((n, k, br) <- Seq((3, 32, 4), (2, 8, 2))) {
       val rows = base.select(
         graft.functions.MinhashBandKeys(col("text"), n, k, br).as("a"),
-        coalesce(graft.llmops.Dedup.bandKeysUdf(n, k, br)(col("text")),
+        coalesce(bandKeysUdf(n, k, br)(col("text")),
           array().cast("array<string>")).as("b")).collect()
       rows.foreach(r => assert(r.get(0) == r.get(1),
         s"band keys diverged at (n=$n,k=$k,br=$br): ${r.get(0)} vs ${r.get(1)}"))
@@ -611,7 +592,7 @@ class LlmOpsSpec extends SparkSpec {
     // null struct in both)
     val qcRows = base.select(
       graft.functions.QualityCountsExpr(col("text")).as("a"),
-      TextAnalysis.qualityCountsUdf(col("text")).as("b")).collect()
+      qualityCountsUdf(col("text")).as("b")).collect()
     qcRows.foreach { r =>
       val a = Option(r.getStruct(0)).map(_.toSeq)
       val b = Option(r.getStruct(1)).map(_.toSeq)
@@ -1231,7 +1212,7 @@ class LlmOpsSpec extends SparkSpec {
       "call 5551234567 or ext 12345",
       "clean text with nothing to hide")
       .toDF("t")
-      .select(graft.functions.TextFunctions.redactPii(col("t")))
+      .select(redactPii(col("t")))
       .as[String].collect()
     assert(out(0) == "mail <EMAIL> now")
     assert(out(1) == "server at <IP> port 8080") // 8080 too short for <NUM>
@@ -1541,9 +1522,14 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("compiled window fingerprints byte-equal to the column expression") {
+    // the joined-buffer k-gram hash core (what winnowing selects from)
+    // vs the column-expression reference
+    val hexesUdf = udf((s: String) =>
+      if (s == null) None
+      else Some(Dedup.windowHexes(TextAnalysis.alnumTokens(s), 12).toSeq))
     val rows = docs.limit(50).select(
       windowFingerprints(col("text"), 12).as("expr"),
-      graft.llmops.Dedup.windowFingerprintsUdf(12)(col("text")).as("udf"))
+      hexesUdf(col("text")).as("udf"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1))
@@ -1552,10 +1538,12 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     val shorty = Seq("one two").toDF("text").select(
       windowFingerprints(col("text"), 12).as("expr"),
-      graft.llmops.Dedup.windowFingerprintsUdf(12)(col("text")).as("udf"))
+      hexesUdf(col("text")).as("udf"))
       .head()
     assert(shorty.getSeq[String](0) == shorty.getSeq[String](1))
   }
+
+  private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
 
   test("distinct window fingerprints == array_distinct of the expression " +
     "form; positions UDF == first index of each distinct hash") {
@@ -1566,20 +1554,18 @@ class LlmOpsSpec extends SparkSpec {
     val sample = docs.limit(50).select("doc_id", "text").union(edge)
     val rows = sample.select(
       array_distinct(windowFingerprints(col("text"), 12)).as("expr"),
-      graft.llmops.Dedup.distinctWindowFingerprintsUdf(12)(col("text"))
-        .as("udf"),
+      Dedup.distinctWindowFingerprintBytesUdf(12)(col("text")).as("bytes"),
       windowFingerprints(col("text"), 12).as("all"),
-      graft.llmops.Dedup.windowFingerprintPositionsUdf(12)(col("text"))
-        .as("pos"))
+      Dedup.windowFingerprintPositionBytesUdf(12)(col("text")).as("pos"))
       .collect()
     rows.foreach { r =>
-      assert(r.getSeq[String](0) == r.getSeq[String](1))
+      assert(r.getSeq[Array[Byte]](1).map(hex) == r.getSeq[String](0))
       // positions: (first index of hash, hash), in first-occurrence order
       val all = r.getSeq[String](2)
       val want = all.zipWithIndex.groupBy(_._1)
         .map { case (h, xs) => (xs.map(_._2).min, h) }.toSeq.sortBy(_._1)
       val got = r.getSeq[org.apache.spark.sql.Row](3)
-        .map(p => (p.getInt(0), p.getString(1)))
+        .map(p => (p.getInt(0), hex(p.getAs[Array[Byte]](1))))
       assert(got == want)
     }
   }
@@ -1590,24 +1576,25 @@ class LlmOpsSpec extends SparkSpec {
       (9003L, "KKelvin sign 42 mixes UNICODE with digits and CAPS"),
       (9004L, ("dup " * 30) + "tail")).toDF("doc_id", "text")
     val sample = docs.limit(50).select("doc_id", "text").union(edge)
-    val rows = sample.select(
-      graft.llmops.Dedup.distinctWindowFingerprintsUdf(12)(col("text"))
-        .as("hexes"),
-      graft.llmops.Dedup.distinctWindowFingerprintBytesUdf(12)(col("text"))
-        .as("bytes"),
-      graft.llmops.Dedup.windowFingerprintPositionsUdf(12)(col("text"))
-        .as("pos"),
-      graft.llmops.Dedup.windowFingerprintPositionBytesUdf(12)(col("text"))
-        .as("posb"))
+    val rows = sample.select(col("text"),
+      Dedup.distinctWindowFingerprintBytesUdf(12)(col("text")).as("bytes"),
+      Dedup.windowFingerprintPositionBytesUdf(12)(col("text")).as("posb"))
       .collect()
-    def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+    // the string form, driver-side: md5 hex of each space-joined
+    // 12-token window of the regex-split lowercased text
+    def md5Hex(s: String): String = hex(java.security.MessageDigest
+      .getInstance("MD5").digest(s.getBytes("UTF-8")))
     rows.foreach { r =>
-      assert(r.getSeq[Array[Byte]](1).map(hex) == r.getSeq[String](0))
-      val ps = r.getSeq[org.apache.spark.sql.Row](2)
-        .map(p => (p.getInt(0), p.getString(1)))
-      val pb = r.getSeq[org.apache.spark.sql.Row](3)
+      val toks = r.getString(0).toLowerCase(java.util.Locale.ROOT)
+        .split("[^a-z0-9]+").filter(_.nonEmpty)
+      val windows =
+        if (toks.length < 12) Seq(toks.mkString(" "))
+        else toks.sliding(12).map(_.mkString(" ")).toSeq
+      val hexes = windows.map(md5Hex)
+      assert(r.getSeq[Array[Byte]](1).map(hex) == hexes.distinct)
+      val pb = r.getSeq[org.apache.spark.sql.Row](2)
         .map(p => (p.getInt(0), hex(p.getAs[Array[Byte]](1))))
-      assert(pb == ps)
+      assert(pb == hexes.zipWithIndex.distinctBy(_._1).map(_.swap))
     }
   }
 
@@ -1637,28 +1624,23 @@ class LlmOpsSpec extends SparkSpec {
   test("compiled simhash is byte-equal to the column expression") {
     val both = docs.limit(50).select(
       simhash(tokens(col("text")), 16).as("expr16"),
-      graft.llmops.Dedup.simhashUdfFor(16)(tokens(col("text"))).as("udf16"),
       simhash(tokens(col("text")), 64).as("expr64"),
-      graft.llmops.Dedup.simhashUdfFor(64)(tokens(col("text"))).as("udf64"),
-      // the text-level form (tokenizes inside, the r19 hot path)
-      graft.llmops.Dedup.simhashTextUdf(16)(col("text")).as("txt16"),
-      graft.llmops.Dedup.simhashTextUdf(64)(col("text")).as("txt64"),
-      // the packed-long form simhashPairs carries
-      graft.llmops.Dedup.simhashTextLongUdf(16)(col("text")).as("long16"),
-      graft.llmops.Dedup.simhashTextLongUdf(64)(col("text")).as("long64"))
+      // the packed-long kernel simhashPairs carries
+      Dedup.simhashTextLongUdf(16)(col("text")).as("long16"),
+      Dedup.simhashTextLongUdf(64)(col("text")).as("long64"),
+      // the llm_simhash gate's rendering of the same kernel
+      lpad(bin(Dedup.simhashTextLongUdf(16)(col("text"))), 16, "0")
+        .as("gate16"))
       .collect()
     // bit (bits-1-j) of the long == char j of the string form
     def unpack(sh: Long, bits: Int): String =
       (0 until bits).map(j => if (((sh >>> (bits - 1 - j)) & 1L) == 1L) '1'
         else '0').mkString
     both.foreach { r =>
-      assert(r.getString(0) == r.getString(1))
-      assert(r.getString(2) == r.getString(3))
-      assert(r.getString(0) == r.getString(4))
-      assert(r.getString(2) == r.getString(5))
-      assert(unpack(r.getLong(6), 16) == r.getString(4))
-      assert(r.getLong(6) >>> 16 == 0L)
-      assert(unpack(r.getLong(7), 64) == r.getString(5))
+      assert(unpack(r.getLong(2), 16) == r.getString(0))
+      assert(r.getLong(2) >>> 16 == 0L)
+      assert(unpack(r.getLong(3), 64) == r.getString(1))
+      assert(r.getString(4) == r.getString(0))
     }
   }
 
@@ -2027,6 +2009,45 @@ class LlmOpsSpec extends SparkSpec {
       .agg(sum(size(col("fps"))).cast("long").as("s"),
         sum(col("n_kgrams")).as("kg")).head()
     assert(fp.getLong(0) < fp.getLong(1))
+  }
+
+  test("window-fingerprint operators accept null text: no fingerprints, " +
+    "no pairs, and the span cut keeps the row with zero tokens") {
+    import spark.implicits._
+    val span = (1 to 15).map(i => s"tok$i").mkString(" ")
+    val clean = Seq(
+      (1L, s"intro words $span trailing one"),
+      (2L, s"different lead in text $span and more"))
+      .toDF("doc_id", "text")
+    val df = clean.union(Seq((3L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text"))
+    def pairs(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(Dedup.substringDupPairs(df, "doc_id", "text",
+      window = 12)) == Set((1L, 2L)))
+    val spans = Dedup.substringDupSpans(df, "doc_id", "text", window = 12)
+    assert(pairs(spans) == Set((1L, 2L)))
+    assert(pairs(Dedup.containmentPairs(df, "doc_id", "text",
+      window = 12)) == Set((1L, 2L)))
+    val win = Dedup.winnowedFingerprints(df, "doc_id", "text", 8, 4)
+      .where(col("doc_id") === 3L).head()
+    assert(win.getLong(1) == 0L && win.getSeq[Any](2).isEmpty)
+    assert(pairs(Dedup.winnowedDupPairs(df, "doc_id", "text", 8, 4)) ==
+      Set((1L, 2L)))
+    val cut = Dedup.cutDupSpans(df, "doc_id", "text", spans, window = 12)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(cut.keySet == Set(1L, 2L, 3L))
+    assert(cut(3L).getLong(1) == 0L && cut(3L).getLong(2) == 0L)
+    assert(cut(2L).getLong(2) < cut(2L).getLong(1))
+  }
+
+  test("simhashPairs rejects a bandBits that does not divide bits") {
+    import spark.implicits._
+    val df = Seq((1L, "a b c"), (2L, "a b d")).toDF("id", "text")
+    assertThrows[IllegalArgumentException](
+      Dedup.simhashPairs(df, "id", "text", bits = 16, bandBits = 0))
+    assertThrows[IllegalArgumentException](
+      Dedup.simhashPairs(df, "id", "text", bits = 16, bandBits = 5))
   }
 
   test("nbClassify: learns token-class association from the seed; " +

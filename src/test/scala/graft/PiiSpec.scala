@@ -3,14 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.{PiiCountsExpr, PiiRedactExpr, PiiTotalExpr}
 import graft.functions.TextFunctions._
+import graft.ReferenceKernels._
 
 /** Parity suite for the single-pass byte-level PII scanners
   * ([[graft.functions.PiiScan]]) against the java.util.regex chain they
-  * replace in the hot path. The regex forms stay in TextFunctions as
-  * the reference; every row here must agree byte-for-byte, including
-  * the adversarial boundary cases the VERDICT asked for (overlapping
-  * candidates, replacement-created word boundaries, '<NUM>' insertion
-  * order, host backtracking, clamped find() restarts).
+  * replace in the hot path. The regex forms are the reference
+  * ([[ReferenceKernels]]); every row here must agree byte-for-byte,
+  * including the adversarial boundary cases the VERDICT asked for
+  * (overlapping candidates, replacement-created word boundaries,
+  * '<NUM>' insertion order, host backtracking, clamped find()
+  * restarts).
   */
 class PiiSpec extends SparkSpec {
 
