@@ -95,17 +95,9 @@ object CurateApp {
 
   def run(spark: SparkSession, cfg: Config): Seq[(String, Long)] = {
     val docs = spark.read.parquet(cfg.docs)
-    def stage(name: String)(build: => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val t0 = System.nanoTime()
-      val out = graft.core.StageIo.stage(spark,
-        s"${cfg.outDir}/$name", cfg.resume)(build)
-      // per-stage wall print: the 8M crawl run spent 81% of its wall in
-      // this runner and the log had no way to say WHICH stage
-      println(f"[curate] stage $name%-8s " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      out
-    }
+    def stage(name: String)(build: => org.apache.spark.sql.DataFrame) =
+      graft.core.StageIo.stage(spark, "curate", cfg.outDir, name,
+        cfg.resume)(build)
 
     val scored = stage("scored") {
       // quality cut compares INTEGER micros (floor(score*1e6)) so the
@@ -136,16 +128,11 @@ object CurateApp {
     // 12.5 -> 81.8+ s (the pack window exchanges + persists + writes
     // the TEXT) while export only dropped 69.8 -> 55.9 s — net ~55 s
     // SLOWER end-to-end. One narrow plan + one doc_id join + one
-    // bounded file-grouping shuffle is the cheaper shape; the export
-    // below still accepts a kept artifact that carries shard cols
-    // (written during the brief fold design) and then skips the join.
+    // bounded file-grouping shuffle is the cheaper shape.
     val shards = stage("shards") {
-      if (kept.columns.contains("shard_id"))
-        kept.select("doc_id", "shard_id", "shard_offset")
-      else
-        Curation.shardPlan(kept.select(col("doc_id"), col("n_chars")),
-          "doc_id", "n_chars", target, cfg.epoch)
-          .select("doc_id", "shard_id", "shard_offset")
+      Curation.shardPlan(kept.select(col("doc_id"), col("n_chars")),
+        "doc_id", "n_chars", target, cfg.epoch)
+        .select("doc_id", "shard_id", "shard_offset")
     }
     // --export: the PHYSICAL training-shard materialization the plan
     // exists for. One shuffle on a BOUNDED key (shard_id mod
@@ -156,11 +143,8 @@ object CurateApp {
     // 1000 executors this is the same bounded write; file CONTENT is
     // deterministic (hash partition on shard_id + in-file sort).
     if (cfg.export) stage("export") {
-      val src =
-        if (kept.columns.contains("shard_id")) kept
-        else shards.join(kept.drop("shard_id", "shard_offset"),
-          Seq("doc_id"))
-      src.repartition(cfg.shardFiles,
+      shards.join(kept, Seq("doc_id"))
+        .repartition(cfg.shardFiles,
           pmod(col("shard_id"), lit(cfg.shardFiles.toLong)))
         .sortWithinPartitions("shard_id", "shard_offset")
     }

@@ -102,17 +102,9 @@ object DedupApp {
       : Seq[(String, Long)] = {
     val docs = spark.read.parquet(cfg.docs)
     val prior = spark.read.parquet(s"$priorDir/survivors")
-    def stage(name: String)(build: => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val t0 = System.nanoTime()
-      val out = graft.core.StageIo.stage(spark,
-        s"${cfg.outDir}/$name", cfg.resume)(build)
-      // per-stage wall print (the CurateApp pattern): dedup is the
-      // dominant pipeline stage and its log should say which sub-stage
-      println(f"[dedup] stage $name%-10s " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      out
-    }
+    def stage(name: String)(build: => org.apache.spark.sql.DataFrame) =
+      graft.core.StageIo.stage(spark, "dedup", cfg.outDir, name,
+        cfg.resume)(build)
     val flags = stage("flags") {
       Dedup.incrementalDedupFlags(docs, prior, cfg.idCol, cfg.textCol,
         shingleN = cfg.shingleN, k = cfg.k, bandRows = cfg.bandRows,
@@ -168,17 +160,9 @@ object DedupApp {
       case None => ()
     }
     val docs = spark.read.parquet(cfg.docs)
-    def stage(name: String)(build: => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val t0 = System.nanoTime()
-      val out = graft.core.StageIo.stage(spark,
-        s"${cfg.outDir}/$name", cfg.resume)(build)
-      // per-stage wall print (the CurateApp pattern): dedup is the
-      // dominant pipeline stage and its log should say which sub-stage
-      println(f"[dedup] stage $name%-10s " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      out
-    }
+    def stage(name: String)(build: => org.apache.spark.sql.DataFrame) =
+      graft.core.StageIo.stage(spark, "dedup", cfg.outDir, name,
+        cfg.resume)(build)
 
     val pairs = stage("pairs") {
       Dedup.minhashPairs(docs, cfg.idCol, cfg.textCol,

@@ -24,14 +24,23 @@ object StageIo {
     catch { case _: Throwable => false }
   }
 
-  /** Build-or-reuse one stage: reuse only when resuming AND the marker
-    * says the previous write committed; otherwise (re)build with
-    * mode=overwrite, which clears any partial directory first.
+  /** Build-or-reuse stage `name` under `outDir`: reuse only when
+    * resuming AND the marker says the previous write committed;
+    * otherwise (re)build with mode=overwrite, which clears any partial
+    * directory first. Prints the stage's wall time as
+    * `[<app>] stage <name> <secs> s`, so a runner's log says which
+    * stage the time went to (perfbench cuts its stage spans on this
+    * line).
     */
-  def stage(spark: SparkSession, path: String, resume: Boolean)(
-      build: => DataFrame): DataFrame = {
+  def stage(spark: SparkSession, app: String, outDir: String,
+      name: String, resume: Boolean)(build: => DataFrame): DataFrame = {
+    val t0 = System.nanoTime()
+    val path = s"$outDir/$name"
     if (!(resume && committed(spark, path)))
       build.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    val out = spark.read.parquet(path)
+    println(
+      f"[$app] stage $name%-10s ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    out
   }
 }

@@ -15,9 +15,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * inlines into the generated stage; unlike the higher-order-function
   * composition it evaluates no per-element lambdas.
   *
-  * Result is the IDENTICAL sequential fold as VectorFunctions.cosine /
-  * cosineUdf: dot and norms accumulate left-to-right, result =
-  * dot / (sqrt(na) * sqrt(nb)), 0.0 when either norm is zero.
+  * Result is the IDENTICAL sequential fold as the higher-order-function
+  * and UDF forms it replaced (now the test-scope references
+  * `ReferenceKernels.cosine` / `cosineUdf`): dot and norms accumulate
+  * left-to-right, result = dot / (sqrt(na) * sqrt(nb)), 0.0 when either
+  * norm is zero.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

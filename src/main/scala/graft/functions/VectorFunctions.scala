@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 /** Vector math as Catalyst column expressions (no UDFs): built from
   * higher-order functions (`zip_with` / `aggregate`) so everything stays
   * inside whole-stage codegen and needs no serialization boundary.
+  * Cosine similarity is the native [[CosineSimilarity]] expression.
   *
   * Reference semantics: cosine distance over 1536-d float vectors
   * (/root/reference/lib/core/config.ml:96-97, repo_qdrant.ml:132-170).
@@ -19,18 +20,6 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; 0.0 when either vector has zero norm. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val na = norm(a)
-    val nb = norm(b)
-    when(na === 0.0 || nb === 0.0, 0.0).otherwise(d / (na * nb))
-  }
-
-  /** Cosine against a fixed query vector (broadcast as a literal array). */
-  def cosineToQuery(col: Column, query: Seq[Double]): Column =
-    cosine(col.cast("array<double>"), array(query.map(lit): _*))
 
   /** Element-wise sum of an ORDERED array of vectors via a zip_with
     * fold: deterministic addition order (the array's order), so any SQL
@@ -69,41 +58,6 @@ object VectorFunctions {
   def normalizeScore(s: Column): Column =
     when(isnan(s) || s === Double.PositiveInfinity || s === Double.NegativeInfinity, 0.0)
       .otherwise(least(greatest(s, lit(0.0)), lit(1.0)))
-
-  // --- compiled fast paths -------------------------------------------
-  // Spark's higher-order functions evaluate lambdas interpretively per
-  // element; for pair-scan hot loops (millions of cosines) a compiled
-  // Scala UDF with a tight while-loop is ~10x faster and computes the
-  // IDENTICAL sequential fold (same doubles, same oracle hash).
-
-  private def dotF(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  val dotUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: Array[Double], b: Array[Double]) => dotF(a, b))
-
-  val cosineUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: Array[Double], b: Array[Double]) => {
-      val d = dotF(a, b)
-      val na = math.sqrt(dotF(a, a))
-      val nb = math.sqrt(dotF(b, b))
-      if (na == 0.0 || nb == 0.0) 0.0 else d / (na * nb)
-    })
-
-  /** Fast cosine (compiled UDF; exact same result as [[cosine]]). */
-  def cosineFast(a: Column, b: Column): Column =
-    cosineUdf(a.cast("array<double>"), b.cast("array<double>"))
-
-  /** Fast cosine against a fixed query vector (compiled; exact same
-    * result as [[cosineToQuery]]).
-    */
-  def cosineToQueryFast(c: Column, query: Seq[Double]): Column =
-    cosineUdf(c.cast("array<double>"), typedLit(query))
 
   /** Random-projection dimensionality reduction (Johnson-Lindenstrauss):
     * out[p] = dot(vec, W[p]) for a fixed projection matrix `weights`

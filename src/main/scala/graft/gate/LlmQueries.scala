@@ -1181,8 +1181,8 @@ object LlmQueries {
         col("embedding").cast("array<double>").as("eb"))
       a.join(b, col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"),
-          floor(VectorFunctions.cosine(col("ea"), col("eb")) * 1000000)
-            .cast("long").as("cosine_micro"))
+          floor(graft.functions.CosineSimilarity(col("ea"), col("eb")) *
+            1000000).cast("long").as("cosine_micro"))
         .orderBy(desc("cosine_micro"), col("id_a"), col("id_b"))
         .limit(20)
     }),

@@ -2,7 +2,6 @@ package graft.llmops
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -115,27 +114,31 @@ object Ann {
     }
   }
 
-  /** Attach a hyperplane LSH cell column. The weight matrix is
-    * materialized once per executor (lazily, at the observed dim count)
-    * -- the per-row work is just planes*dims multiply-adds.
+  /** Attach a hyperplane LSH cell column (null for a null vector). The
+    * weight matrix is materialized once per executor (lazily, at the
+    * observed dim count) -- the per-row work is just planes*dims
+    * multiply-adds.
     */
   def withHyperplaneCell(df: DataFrame, vecCol: String, planes: Int,
       seed: Int = 42): DataFrame = {
     val weights = new PlaneWeights(planes, seed)
     val f = udf { (v: Seq[Double]) =>
-      val w = weights.get(v.length)
-      val arr = v.toArray
-      val sb = new StringBuilder(planes)
-      var p = 0
-      while (p < planes) {
-        val wp = w(p)
-        var dot = 0.0
-        var i = 0
-        while (i < arr.length) { dot += arr(i) * wp(i); i += 1 }
-        sb.append(if (dot >= 0) '1' else '0')
-        p += 1
+      if (v == null) null
+      else {
+        val w = weights.get(v.length)
+        val arr = v.toArray
+        val sb = new StringBuilder(planes)
+        var p = 0
+        while (p < planes) {
+          val wp = w(p)
+          var dot = 0.0
+          var i = 0
+          while (i < arr.length) { dot += arr(i) * wp(i); i += 1 }
+          sb.append(if (dot >= 0) '1' else '0')
+          p += 1
+        }
+        sb.toString
       }
-      sb.toString
     }
     df.withColumn("cell", f(col(vecCol).cast("array<double>")))
   }
@@ -278,18 +281,21 @@ object Ann {
     lloyd(hashSample(df, vecCol, sampleCap), nCells, iters)
   }
 
-  /** Nearest-centroid cell id (compiled UDF; centroids ride the closure
-    * as one broadcast-sized array).
+  /** Nearest-centroid cell id, null for a null vector (compiled UDF;
+    * centroids ride the closure as one broadcast-sized array).
     */
   def withIvfCentroidCell(df: DataFrame, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame = {
     val f = udf { (v: Seq[Double]) =>
-      val x = l2normalize(v.toArray)
-      var bc = 0; var bd = Double.MinValue; var c = 0
-      while (c < centroids.length) {
-        val d = dot(x, centroids(c)); if (d > bd) { bd = d; bc = c }; c += 1
+      if (v == null) null
+      else {
+        val x = l2normalize(v.toArray)
+        var bc = 0; var bd = Double.MinValue; var c = 0
+        while (c < centroids.length) {
+          val d = dot(x, centroids(c)); if (d > bd) { bd = d; bc = c }; c += 1
+        }
+        Int.box(bc)
       }
-      bc
     }
     df.withColumn("cell", f(col(vecCol).cast("array<double>")))
   }
@@ -349,7 +355,7 @@ object Ann {
         graft.functions.VectorFunctions.randomProjection(col(vecCol), w)
           .as("__p"))
       .withColumn("rp_score",
-        graft.functions.VectorFunctions.cosineToQueryFast(col("__p"), qProj))
+        graft.functions.CosineSimilarity(col("__p"), typedLit(qProj)))
       .orderBy(desc("rp_score"), col("id"))
       .limit(rerank)
     cand
@@ -401,43 +407,36 @@ object Ann {
     *
     * `maxCellPop` closes the remaining quadratic hole: N near-identical
     * vectors (web-scale boilerplate) land in ONE cell no matter how many
-    * planes, and the within-cell join goes O(N^2). A cell whose RIGHT
-    * population exceeds the cap is sub-split into k = ceil(pop/cap)
-    * deterministic md5(id)-mod-k sub-buckets on BOTH sides (the
-    * [[Dedup.semanticKeyed]] protocol: first 14 hex chars of
-    * md5(cast(id as string)) base-16), so per-left candidates are
-    * bounded by ~maxCellPop and total pair volume by pop*cap -- linear
-    * in pop. Recall trade is one-sided: only neighbors split across
-    * sub-buckets of a hot cell can be lost, and a hot cell is exactly
-    * the near-duplicate pile where any k of the pile are
-    * interchangeable neighbors. The cell histogram is bounded by
-    * 2^planes, broadcastable by construction.
+    * planes. It is the hot-bucket cap ([[graft.core.Skew.hotBuckets]])
+    * on the RIGHT side's cells (the candidate pool being searched);
+    * both sides sub-split by their own id under that histogram, so
+    * per-left candidates are bounded by ~maxCellPop. A hot cell is the
+    * near-duplicate pile where any k of the pile are interchangeable
+    * neighbors. A null vector gets a null cell and no edge.
     */
-  /** Per-cell sub-split factor from a hyperplane-celled frame:
-    * (cell, __k) with k = ceil(pop/maxCellPop) for hot cells, 1
-    * otherwise. At most 2^planes rows -- broadcastable by construction.
-    */
-  private[graft] def hotCellSubK(celled: DataFrame,
-      maxCellPop: Int): DataFrame =
-    celled.groupBy("cell").agg(count(lit(1)).as("__pop"))
-      .select(col("cell"),
-        when(col("__pop") > maxCellPop,
-          ceil(col("__pop").cast("double") / maxCellPop).cast("long"))
-          .otherwise(lit(1L)).as("__k"))
-
-  /** md5(id)-mod-k sub-bucket within each cell (the semanticKeyed
-    * protocol: first 14 hex chars of md5(cast(id as string)), base-16).
-    */
-  private[graft] def withHotCellSub(celled: DataFrame, idName: String,
-      subK: DataFrame): DataFrame =
-    celled.join(broadcast(subK), Seq("cell"))
-      .withColumn("__sub",
-        pmod(conv(substring(md5(col(idName).cast("string")), 1, 14),
-          16, 10).cast("long"), col("__k")))
-      .drop("__k")
+  def knnJoin(left: DataFrame, right: DataFrame, idCol: String,
+      vecCol: String, k: Int, planes: Int = 8, seed: Int = 42,
+      maxCellPop: Int = Int.MaxValue): DataFrame = {
+    val l0 = withHyperplaneCell(left, vecCol, planes, seed)
+      .select(col(idCol).as("lid"), col(vecCol).cast("array<double>").as("lv"),
+        col("cell"))
+    val r0 = withHyperplaneCell(right, vecCol, planes, seed)
+      .select(col(idCol).as("rid"), col(vecCol).cast("array<double>").as("rv"),
+        col("cell"))
+    val hot = graft.core.Skew.hotBuckets(r0, Seq("cell"), maxCellPop)
+    val l = graft.core.Skew.withSubBucket(l0, Seq("cell"), "lid", hot)
+    val r = graft.core.Skew.withSubBucket(r0, Seq("cell"), "rid", hot)
+    val scored = l.join(r, Seq("cell", "__sub"))
+      .where(col("lid") =!= col("rid"))
+      .select(col("lid"), col("rid"), graft.functions.CosineSimilarity(col("lv"), col("rv")).as("score"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("lid").orderBy(desc("score"), col("rid"))
+    scored.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k).drop("__rn")
+  }
 
   /** Self-join keying as [[knnJoin]] applies it: (id, cell, __sub) with
-    * the sub-split factor from the frame's own cell histogram -- the
+    * the sub-split from the frame's own cell histogram -- the
     * ScaleCurve harness derives capped candidate volume from exactly
     * the keys the join would use.
     */
@@ -445,34 +444,7 @@ object Ann {
       planes: Int, seed: Int, maxCellPop: Int): DataFrame = {
     val celled = withHyperplaneCell(df, vecCol, planes, seed)
       .select(col(idCol).as("id"), col("cell"))
-    withHotCellSub(celled, "id", hotCellSubK(celled, maxCellPop))
-  }
-
-  def knnJoin(left: DataFrame, right: DataFrame, idCol: String,
-      vecCol: String, k: Int, planes: Int = 8, seed: Int = 42,
-      maxCellPop: Int = Int.MaxValue): DataFrame = {
-    require(maxCellPop > 0, "maxCellPop must be positive")
-    val l0 = withHyperplaneCell(left, vecCol, planes, seed)
-      .select(col(idCol).as("lid"), col(vecCol).cast("array<double>").as("lv"),
-        col("cell"))
-    val r0 = withHyperplaneCell(right, vecCol, planes, seed)
-      .select(col(idCol).as("rid"), col(vecCol).cast("array<double>").as("rv"),
-        col("cell"))
-    val (l, r, joinKeys) =
-      if (maxCellPop == Int.MaxValue) (l0, r0, Seq("cell"))
-      else {
-        // Sub-split factor from the RIGHT side (the candidate pool being
-        // searched); both sides split by their own id under the same k.
-        val subK = hotCellSubK(r0, maxCellPop)
-        (withHotCellSub(l0, "lid", subK), withHotCellSub(r0, "rid", subK),
-          Seq("cell", "__sub"))
-      }
-    val scored = l.join(r, joinKeys)
-      .where(col("lid") =!= col("rid"))
-      .select(col("lid"), col("rid"), graft.functions.CosineSimilarity(col("lv"), col("rv")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("lid").orderBy(desc("score"), col("rid"))
-    scored.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k).drop("__rn")
+    graft.core.Skew.withSubBucket(celled, Seq("cell"), "id",
+      graft.core.Skew.hotBuckets(celled, Seq("cell"), maxCellPop))
   }
 }

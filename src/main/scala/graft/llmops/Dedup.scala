@@ -3,7 +3,6 @@ package graft.llmops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -173,26 +172,14 @@ object Dedup {
     * exact Jaccard verification >= threshold. Returns (id_a, id_b,
     * jaccard) with id_a < id_b.
     *
-    * `maxBandPop` closes the same quadratic hole the simhash/knn/
-    * semantic caps close (r13): N near-identical documents (web-scale
-    * boilerplate) share EVERY band hash, so the within-bucket self-join
-    * goes O(N^2) regardless of banding. A (band, band_hash) bucket
-    * whose population exceeds the cap sub-splits into ceil(pop/cap)
-    * deterministic md5(id)-mod-k sub-buckets (the semanticKeyed
-    * protocol), bounding pair volume by pop*cap. Only the HOT buckets
-    * (pop > cap) ride the broadcast — tiny by definition at any corpus
-    * size, unlike the full bucket histogram, whose key space here is
-    * unbounded (md5 band hashes, not fixed-width chunks). Recall trade
-    * is one-sided: capped candidates are a SUBSET of the uncapped
-    * candidates. Note the approximation honestly: a bucket of N docs
-    * sub-splits into ceil(N/cap) components with NO cross-sub pairs, so
-    * a cluster wholly inside one hot bucket may come out as up to
-    * ceil(N/cap) clusters (cluster dedup then retains one survivor per
-    * SUB-cluster, and [[sourceOverlapMatrix]] undercounts cross-source
-    * pairs accordingly). When the cap engages, the operator logs how
-    * many buckets sub-split (slf4j "graft.llmops.Dedup") so a
-    * measurement consumer can see the approximation; when no bucket
-    * exceeds the cap the output is EXACTLY the uncapped output.
+    * `maxBandPop` is the hot-bucket cap on (band, band_hash) buckets
+    * ([[graft.core.Skew.hotBuckets]] holds the rule and its recall
+    * trade): N near-identical documents share EVERY band hash, so
+    * without it the within-bucket self-join goes O(N^2) regardless of
+    * banding. Capped, a cluster wholly inside one hot bucket may come
+    * out as up to ceil(N/cap) clusters (cluster dedup then retains one
+    * survivor per SUB-cluster, and [[sourceOverlapMatrix]] undercounts
+    * cross-source pairs accordingly).
     *
     * The cap DEFAULTS ON (256, [[DefaultHotCap]]) as of r18: the r17
     * 2M-document CLI run proved the uncapped path is not survivable (a
@@ -208,7 +195,6 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bandRows: Int = 4,
       threshold: Double = 0.7, maxBandPop: Int = DefaultHotCap): DataFrame = {
-    require(maxBandPop > 0, "maxBandPop must be positive")
     // persisted: consumed by BOTH verification attach joins on different
     // keys (id_a / id_b), which exchange reuse can't cover (round-7
     // measurement, same rationale as ngramJaccardPairs.ordered).
@@ -239,70 +225,28 @@ object Dedup {
   }
 
   /** The LSH join keying as [[minhashPairs]] applies it: (id, band,
-    * band_hash, __sub) with the hot-band md5 sub-split — exposed so the
+    * band_hash, __sub) with the hot-band sub-split -- exposed so the
     * ScaleCurve harness derives capped candidate volume from exactly
     * the keys the join uses (the [[Ann.knnKeyed]] pattern).
     *
     * EAGER when `maxBandPop` is finite (the default): CONSTRUCTING the
-    * returned DataFrame runs one driver-blocking Spark job — the
-    * hot-bucket histogram count that decides the empty-hot
-    * short-circuit. The counted frame is bounded (post-aggregation,
-    * over-cap buckets only), but a caller building plans speculatively
-    * (a notebook, a planner) pays the full tokenize+shingle+sign scan
-    * at construction, not at first action. Pass
-    * `maxBandPop = Int.MaxValue` for a fully lazy (uncapped) plan.
+    * returned DataFrame runs the full tokenize+shingle+sign scan and
+    * the hot-bucket histogram count ([[graft.core.Skew.hotBuckets]]).
+    * Pass `maxBandPop = Int.MaxValue` for a fully lazy (uncapped) plan.
     */
   private[graft] def minhashKeyed(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int, k: Int, bandRows: Int,
       maxBandPop: Int): DataFrame = {
-    val banded00 =
-      minhashBandKeys(df, idCol, textCol, shingleN, k, bandRows)
-    if (maxBandPop == Int.MaxValue) banded00.withColumn("__sub", lit(0L))
-    else {
-      // pinned: the capped path consumes the signature scan (k x
-      // shingles md5s per row — the operator's compute) from TWO
-      // subtrees (hot-bucket histogram + the keyed join side), which
-      // exchange reuse cannot cover; without the persist the scan runs
-      // twice. Narrow (id, band, band_hash) rows, disk-spillable.
-      val banded0 = graft.core.Caches.scoped(banded00)
-      // the hot frame is itself pinned: the driver count below AND the
-      // broadcast join both consume it, and without the persist the
-      // non-empty branch would pay the histogram aggregation TWICE
-      // (the r19 bench caught exactly that: llm_minhash_capped 1.43x)
-      val hot = graft.core.Caches.scoped(
-        banded0.groupBy("band", "band_hash")
-          .agg(count(lit(1)).as("__pop"))
-          .where(col("__pop") > maxBandPop)
-          .select(col("band"), col("band_hash"),
-            ceil(col("__pop").cast("double") / maxBandPop).cast("long")
-              .as("__k")))
-      // empty-hot short-circuit (r19): the histogram is a bounded
-      // aggregate over the persisted scan; when NO bucket exceeds the
-      // cap, the sub-split machinery is a no-op by construction (__k
-      // null everywhere → __sub = 0), so skip the broadcast join and
-      // the md5-mod expression entirely. One tiny driver action on an
-      // already-aggregated frame; byte-identical output either way —
-      // and it reclaims most of the cap-default overhead on clean
-      // corpora (llm_minhash_pairs was 1.46× its pre-cap time). When
-      // the cap DOES engage, say so: sub-splitting is a recall
-      // approximation (clusters may split ceil(pop/cap) ways) that a
-      // measurement consumer must be able to see in the log.
-      val nHot = hot.count()
-      if (nHot == 0L) banded0.withColumn("__sub", lit(0L))
-      else {
-        org.slf4j.LoggerFactory.getLogger("graft.llmops.Dedup").warn(
-          s"minhash hot-bucket cap engaged: $nHot bucket(s) exceed " +
-            s"maxBandPop=$maxBandPop and sub-split; capped pairs are a " +
-            "subset (clusters may split ceil(pop/cap) ways)")
-        banded0.join(broadcast(hot), Seq("band", "band_hash"), "left")
-          .withColumn("__sub",
-            when(col("__k").isNull, lit(0L))
-              .otherwise(pmod(
-                conv(substring(md5(col("id").cast("string")), 1, 14),
-                  16, 10).cast("long"), col("__k"))))
-          .drop("__k")
-      }
-    }
+    // pinned: the capped path consumes the signature scan (k x
+    // shingles md5s per row -- the operator's compute) from TWO
+    // subtrees (hot-bucket histogram + the keyed join side), which
+    // exchange reuse cannot cover. Narrow (id, band, band_hash) rows,
+    // disk-spillable.
+    val banded = graft.core.Caches.scoped(
+      minhashBandKeys(df, idCol, textCol, shingleN, k, bandRows))
+    val keys = Seq("band", "band_hash")
+    graft.core.Skew.withSubBucket(banded, keys, "id",
+      graft.core.Skew.hotBuckets(banded, keys, maxBandPop))
   }
 
   /** Cross-source near-duplicate overlap matrix: for each unordered
@@ -412,24 +356,16 @@ object Dedup {
   /** SimHash near-dup pairs: `bits`-bit simhash, banded into bits/bandBits
     * chunks for candidate generation, hamming-distance verification.
     *
-    * `maxBucketPop` bounds the quadratic failure mode of short hashes /
-    * low-entropy corpora: when many docs share a band chunk (16-bit
-    * simhash over a shared-vocabulary corpus collides by construction;
-    * at web scale, boilerplate does the same), the within-bucket join is
-    * O(pop^2). A (band, chunk) bucket whose population exceeds the cap
-    * sub-splits into ceil(pop/cap) deterministic md5(id)-mod-k
-    * sub-buckets ([[semanticKeyed]] protocol), bounding per-bucket pair
-    * volume by pop*cap. Recall trade is one-sided -- a pair split across
-    * sub-buckets in EVERY band it collides in is no longer compared --
-    * and hot buckets are exactly where hamming-verified survivors are
-    * interchangeable. The (band, chunk) histogram has at most
-    * (bits/bandBits) * 2^bandBits rows; it is broadcast when bandBits
-    * keeps that bounded, shuffled otherwise.
+    * `maxBucketPop` is the hot-bucket cap on (band, chunk) buckets
+    * ([[graft.core.Skew.hotBuckets]]): 16-bit simhash over a
+    * shared-vocabulary corpus collides by construction, and at web
+    * scale boilerplate does the same. A pair is lost only when it is
+    * split across sub-buckets in EVERY band it collides in. Eager when
+    * the cap is finite, like [[minhashKeyed]].
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, bandBits: Int = 16, maxHamming: Int = 3,
       maxBucketPop: Int = DefaultHotCap): DataFrame = {
-    require(maxBucketPop > 0, "maxBucketPop must be positive")
     // the LONG representation below caps the operator at 64 bits — no
     // caller exceeds the word2vec-conventional 64 (the gate uses 16)
     require(bits <= 64, s"simhashPairs supports bits <= 64, got $bits")
@@ -438,8 +374,8 @@ object Dedup {
         s"bandBits=$bandBits")
     // scoped-persisted: the simhash-UDF corpus scan (one md5 per token)
     // has multiple consumers -- both self-join sides plus the capped
-    // path's bucket-population aggregate -- and exchange reuse cannot
-    // cover the pops branch. (id, LONG hash) is the narrowest frame in
+    // path's hot-bucket histogram -- and exchange reuse cannot cover
+    // the histogram. (id, LONG hash) is the narrowest frame in
     // the operator (r22 — was a '0'/'1' CHAR string: 8 bytes instead
     // of `bits` chars through the pin, the band explode and both join
     // sides, and hamming becomes one xor+popcount instead of a char
@@ -458,28 +394,9 @@ object Dedup {
     val banded0 = base.select(col("id"), col("sh"),
       explode(array(bandStructs: _*)).as("b"))
       .select(col("id"), col("sh"), col("b.band"), col("b.chunk"))
-    val banded =
-      if (maxBucketPop == Int.MaxValue) banded0.withColumn("__sub", lit(0L))
-      else {
-        val pops = banded0.groupBy("band", "chunk")
-          .agg(count(lit(1)).as("__pop"))
-          .select(col("band"), col("chunk"),
-            when(col("__pop") > maxBucketPop,
-              ceil(col("__pop").cast("double") / maxBucketPop).cast("long"))
-              .otherwise(lit(1L)).as("__k"))
-        // broadcast only when the THEORETICAL bucket-key bound (one row
-        // per populated (band, chunk)) is small -- bandBits alone is the
-        // wrong gate: at bandBits=20 with 64-bit hashes there are
-        // nBands<<bandBits = 4M possible keys, megabytes per task
-        val maxKeys =
-          if (bandBits >= 40) Long.MaxValue else nBands.toLong << bandBits
-        val popsH = if (maxKeys <= (1L << 20)) broadcast(pops) else pops
-        banded0.join(popsH, Seq("band", "chunk"))
-          .withColumn("__sub",
-            pmod(conv(substring(md5(col("id").cast("string")), 1, 14),
-              16, 10).cast("long"), col("__k")))
-          .drop("__k")
-      }
+    val keys = Seq("band", "chunk")
+    val banded = graft.core.Skew.withSubBucket(banded0, keys, "id",
+      graft.core.Skew.hotBuckets(banded0, keys, maxBucketPop))
     banded.as("l")
       .join(banded.as("r"),
         col("l.band") === col("r.band") &&
@@ -600,24 +517,16 @@ object Dedup {
     * within a cluster only -- the clustering IS the candidate generator,
     * same role as a band key) and the id-keyed flag join. Cluster sizes
     * are bounded by nCells sizing (at 100 TB: ~sqrt(n) cells keeps
-    * within-cell pair volume near-linear) PLUS `maxCellPop`: a cell
-    * whose population exceeds the cap is sub-split into
-    * k = ceil(pop / maxCellPop) deterministic sub-buckets (md5(id) mod
-    * k -- the same judgment call as [[dropHotFingerprints]], applied to
-    * the embedding-space analog of a hot fingerprint), so no single
-    * degenerate mega-cluster (near-identical boilerplate docs at web
-    * scale) can make its join quadratic: per-(cell, sub) pair volume is
-    * bounded by ~maxCellPop^2 regardless of cluster skew.
+    * within-cell pair volume near-linear) PLUS `maxCellPop`, the
+    * hot-bucket cap on cells ([[graft.core.Skew.hotBuckets]]), so no
+    * single degenerate mega-cluster (near-identical boilerplate docs at
+    * web scale) can make its join quadratic: per-(cell, sub) pair
+    * volume is bounded by ~maxCellPop^2 regardless of cluster skew. Hot
+    * cells are exactly the boilerplate clusters where greedy keep-first
+    * pruning is least meaningful.
     *
-    * Recall tradeoff of the cap (mirrors dropHotFingerprints): a dup
-    * pair split across sub-buckets of a hot cell is no longer compared.
-    * Hot cells are exactly the boilerplate clusters where greedy
-    * keep-first pruning is least meaningful, and expected recall inside
-    * a sub-split cell stays 1/k per pair while total candidate volume
-    * drops from pop^2/2 to pop*maxCellPop/2 -- linear in pop. The
-    * sub-key is md5-derived so a DuckDB oracle re-makes the identical
-    * split (both engines: first 14 hex chars of md5(cast(id as
-    * string)) parsed base-16, mod k).
+    * A null embedding gets a null cell: it joins nothing, so its row
+    * comes back with `semantic_dup = false`.
     *
     * The threshold compares floor(cosine * 1e6) against an integer so a
     * SQL oracle re-makes the same decision; see the gate's FP-margin
@@ -625,41 +534,6 @@ object Dedup {
     * itself is integer-exact (counts, ceil of an exact small-int ratio,
     * md5 bits) and adds no FP surface.
     */
-  /** Cell + hot-cell sub-bucket assignment shared by
-    * [[semanticDupFlags]], its bounded-candidates spec, and the
-    * ScaleCurve harness: (id, __v, cell, __sub). Pair candidates exist
-    * only within an exact (cell, __sub) match.
-    */
-  private[graft] def semanticKeyed(df: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[Array[Double]],
-      maxCellPop: Int): DataFrame = {
-    require(maxCellPop > 0, "maxCellPop must be positive")
-    // pinned: the centroid-cell assignment (a full distance sweep per
-    // row) feeds the cell histogram AND the keyed output — and the
-    // caller self-joins the keyed frame besides. Map-side work has no
-    // exchange for ReuseExchange to catch, so without the persist the
-    // sweep reruns per consumer.
-    val base = graft.core.Caches.scoped(Ann.withIvfCentroidCell(
-      df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("__v")),
-      "__v", centroids))
-    if (maxCellPop == Int.MaxValue) base.withColumn("__sub", lit(0L))
-    else {
-      // Cell histogram is bounded by nCells -> broadcastable by
-      // construction; the corpus joins it map-side.
-      val pops = base.groupBy("cell").agg(count(lit(1)).as("__pop"))
-      base.join(broadcast(pops), Seq("cell"))
-        .withColumn("__k",
-          when(col("__pop") > maxCellPop,
-            ceil(col("__pop").cast("double") / maxCellPop).cast("long"))
-            .otherwise(lit(1L)))
-        .withColumn("__sub",
-          pmod(conv(substring(md5(col("id").cast("string")), 1, 14),
-            16, 10).cast("long"), col("__k")))
-        .drop("__pop", "__k")
-    }
-  }
-
   def semanticDupFlags(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], thresholdMicro: Long,
       maxCellPop: Int = DefaultHotCap): DataFrame = {
@@ -677,6 +551,27 @@ object Dedup {
     base.join(dups.withColumn("__d", lit(true)), Seq("id"), "left")
       .select(col("id").as(idCol), col("cell"),
         coalesce(col("__d"), lit(false)).as("semantic_dup"))
+  }
+
+  /** Cell + hot-cell sub-bucket assignment shared by
+    * [[semanticDupFlags]], its bounded-candidates spec, and the
+    * ScaleCurve harness: (id, __v, cell, __sub). Pair candidates exist
+    * only within an exact (cell, __sub) match.
+    */
+  private[graft] def semanticKeyed(df: DataFrame, idCol: String,
+      vecCol: String, centroids: Array[Array[Double]],
+      maxCellPop: Int): DataFrame = {
+    // pinned: the centroid-cell assignment (a full distance sweep per
+    // row) feeds the cell histogram AND the keyed output — and the
+    // caller self-joins the keyed frame besides. Map-side work has no
+    // exchange for ReuseExchange to catch, so without the persist the
+    // sweep reruns per consumer.
+    val base = graft.core.Caches.scoped(Ann.withIvfCentroidCell(
+      df.select(col(idCol).as("id"),
+        col(vecCol).cast("array<double>").as("__v")),
+      "__v", centroids))
+    graft.core.Skew.withSubBucket(base, Seq("cell"), "id",
+      graft.core.Skew.hotBuckets(base, Seq("cell"), maxCellPop))
   }
 
   // --- shared window-fingerprint core (r21) --------------------------

@@ -40,51 +40,22 @@ object CurationScale {
     val spark = GraftSession.bench("graft-curation-scale")
     val root = TempDirs.create("curation_scale")
 
-    // Per-pipeline-stage Spark task metrics: at 10M+ docs the honest
-    // scale story is WHERE the shuffle bytes and spill land, not just
-    // wall seconds. Spark-stage completions are attributed to whichever
-    // pipeline stage is current when they fire (events are async; the
-    // short post-stage sleep below drains the bus before the label
-    // changes).
-    val stageMetrics =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    @volatile var currentStage = "init"
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val tm = sc.stageInfo.taskMetrics
-          if (tm != null) {
-            val arr = stageMetrics.computeIfAbsent(currentStage,
-              _ => new Array[Long](5))
-            arr.synchronized {
-              arr(0) += tm.shuffleWriteMetrics.bytesWritten
-              arr(1) += tm.shuffleReadMetrics.totalBytesRead
-              arr(2) += tm.memoryBytesSpilled
-              arr(3) += tm.diskBytesSpilled
-              arr(4) = math.max(arr(4), tm.peakExecutionMemory)
-            }
-          }
-        }
-      })
+    val counters = new StageCounters(spark.sparkContext)
 
     // stage harness: materialize as parquet, read the artifact back
     var stageSecs = List.empty[(String, Double, Long)]
     def stage(name: String)(build: => DataFrame): DataFrame = {
       val p = s"$root/$name"
-      currentStage = name
+      counters.begin(name)
       val t0 = System.nanoTime()
       build.write.mode("overwrite").parquet(p)
       val out = spark.read.parquet(p)
       val n = out.count()
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // drain async listener events under this label
+      counters.drain()
       stageSecs ::= ((name, secs, n))
-      val m = stageMetrics.getOrDefault(name, new Array[Long](5))
       println(f"[scale] $name%-14s $secs%7.1f s -> $n%,12d rows  " +
-        f"(shuf w/r ${m(0) / 1e6}%,.0f/${m(1) / 1e6}%,.0f MB, " +
-        f"spill mem/disk ${m(2) / 1e6}%,.0f/${m(3) / 1e6}%,.0f MB)")
+        counters.summary(name))
       out
     }
 
@@ -213,7 +184,7 @@ object CurationScale {
     println("[scale] stage          secs        rows      rows/s " +
       "shufW_MB shufR_MB spillD_MB peakMem_MB")
     stageSecs.reverse.foreach { case (name, secs, n) =>
-      val m = stageMetrics.getOrDefault(name, new Array[Long](5))
+      val m = counters(name)
       println(f"[scale] $name%-14s $secs%6.1f ${n}%,12d ${n / secs}%,11.0f " +
         f"${m(0) / 1e6}%8.0f ${m(1) / 1e6}%8.0f ${m(3) / 1e6}%9.0f " +
         f"${m(4) / 1e6}%10.0f")

@@ -43,42 +43,16 @@ object EmbedTrainScale {
     val spark = GraftSession.bench("graft-embed-train-scale")
     val root = TempDirs.create("embed_scale")
 
-    val stageMetrics =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    @volatile var currentStage = "init"
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val tm = sc.stageInfo.taskMetrics
-          if (tm != null) {
-            val arr = stageMetrics.computeIfAbsent(currentStage,
-              _ => new Array[Long](5))
-            arr.synchronized {
-              arr(0) += tm.shuffleWriteMetrics.bytesWritten
-              arr(1) += tm.shuffleReadMetrics.totalBytesRead
-              arr(2) += tm.memoryBytesSpilled
-              arr(3) += tm.diskBytesSpilled
-              arr(4) = math.max(arr(4), tm.peakExecutionMemory)
-            }
-          }
-        }
-      })
+    val counters = new StageCounters(spark.sparkContext)
 
-    def report(name: String, secs: Double, n: Long): Unit = {
-      val m = stageMetrics.getOrDefault(name, new Array[Long](5))
-      println(f"[embed] $name%-12s $secs%7.1f s -> $n%,14d rows  " +
-        f"(shuf w/r ${m(0) / 1e6}%,.0f/${m(1) / 1e6}%,.0f MB, " +
-        f"spill mem/disk ${m(2) / 1e6}%,.0f/${m(3) / 1e6}%,.0f MB)")
-    }
     def timed[A](name: String)(body: => (A, Long)): A = {
-      currentStage = name
+      counters.begin(name)
       val t0 = System.nanoTime()
       val (a, n) = body
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      report(name, secs, n)
+      counters.drain()
+      println(f"[embed] $name%-12s $secs%7.1f s -> $n%,14d rows  " +
+        counters.summary(name))
       a
     }
 

@@ -51,26 +51,6 @@ object SplitIngestBench {
       ((System.nanoTime() - t0) / 1e9, n)
     }
 
-    // stage-level visibility (GRAFT_SPLIT_DEBUG=1): where does the wall
-    // go -- read, group shuffle, window, or parse?
-    if (sys.env.contains("GRAFT_SPLIT_DEBUG")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler
-                .SparkListenerStageCompleted): Unit = {
-            val i = s.stageInfo
-            val dur = (for {
-              a <- i.completionTime; b <- i.submissionTime
-            } yield (a - b) / 1000.0).getOrElse(-1.0)
-            val rdds = i.rddInfos.map(r => r.name).mkString("|")
-            System.err.println(
-              f"[stage] id=${i.stageId} tasks=${i.numTasks} " +
-                f"dur=$dur%.2fs rdds=${rdds.take(160)}")
-          }
-        })
-    }
-
     // order: splittable first so wholetext gets any page-cache benefit
     // (bias AGAINST the new reader)
     val (splitSec, nSplit) = time {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimilarity, VectorFunctions}
+import graft.functions.CosineSimilarity
 
 class CosineExprSpec extends SparkSpec {
 
@@ -12,8 +12,8 @@ class CosineExprSpec extends SparkSpec {
     val q = emb.where("vec_id = 3")
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     val rows = emb.select(col("vec_id"),
-      VectorFunctions.cosineToQuery(col("embedding"), q).as("hof"),
-      VectorFunctions.cosineToQueryFast(col("embedding"), q).as("udf"),
+      ReferenceKernels.cosineToQuery(col("embedding"), q).as("hof"),
+      ReferenceKernels.cosineToQueryFast(col("embedding"), q).as("udf"),
       CosineSimilarity(col("embedding"), typedLit(q)).as("native"))
       .collect()
     rows.foreach { r =>

@@ -358,19 +358,13 @@ class LlmOpsSpec extends SparkSpec {
     val knn = Ann.knnJoin(df, df, "vec_id", "embedding", k = 2,
       planes = 4, maxCellPop = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    def subOf(id: Long, k: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(id.toString.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(14)
-      java.lang.Long.parseLong(hex, 16) % k
-    }
     val perLid = knn.groupBy(_._1).view.mapValues(_.length).toMap
     assert(perLid.values.forall(_ <= 2))
     // every hot-cell edge stays inside one md5 sub-bucket: the join
     // never compared rows across sub-buckets, so per-left candidate
     // count is bounded by the sub population (~cap), not the cell's 60
     knn.filter(_._1 <= 60L).foreach { case (lid, rid) =>
-      assert(subOf(lid, 6) == subOf(rid, 6),
+      assert(subBucketOf(lid, 6) == subBucketOf(rid, 6),
         s"edge ($lid,$rid) crosses sub-buckets")
     }
     // cold cell is under the cap: uncapped all-pairs semantics intact
@@ -699,6 +693,40 @@ class LlmOpsSpec extends SparkSpec {
       thresholdMicro = 990000L)
       .collect().count(r => r.getLong(0) <= 40 && !r.getBoolean(2))
     assert(un == 1)
+  }
+
+  test("vector operators accept a null embedding: no flag, no edge, " +
+    "no pair") {
+    import spark.implicits._
+    // 1, 2 and 3 identical (one cell, over the cap of 2 -> the hot-cell
+    // sub-split runs); 4 alone in the opposite cell; 5 is null
+    val df = Seq(
+      (1L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (3L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (4L, Seq(-1.0, 0.0, 0.0, 0.0)),
+      (5L, null)).toDF("vec_id", "embedding")
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0), Array(-1.0, 0.0, 0.0, 0.0))
+    Seq(2, Int.MaxValue).foreach { cap =>
+      val flags = Dedup.semanticDupFlags(df, "vec_id", "embedding", cents,
+        thresholdMicro = 990000L, maxCellPop = cap).collect()
+        .map(r => r.getLong(0) -> r).toMap
+      assert(flags.keySet == Set(1L, 2L, 3L, 4L, 5L), s"cap $cap")
+      assert(flags(5L).isNullAt(1) && !flags(5L).getBoolean(2), s"cap $cap")
+      assert(!flags(1L).getBoolean(2) && !flags(4L).getBoolean(2))
+    }
+    val knn = Ann.knnJoin(df, df, "vec_id", "embedding", k = 2, planes = 4,
+      maxCellPop = 2).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(knn.nonEmpty)
+    assert(!knn.exists { case (l, r) => l == 5L || r == 5L })
+    Seq(8, 0).foreach { planes =>
+      val pairs = Dedup.embeddingPairs(df, "vec_id", "embedding",
+        threshold = -1.0, planes = planes).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(pairs.nonEmpty, s"planes $planes")
+      assert(!pairs.exists { case (a, b) => a == 5L || b == 5L },
+        s"planes $planes")
+    }
   }
 
   test("image header parser: real PNG/GIF/BMP/JPEG layouts, safe on junk") {

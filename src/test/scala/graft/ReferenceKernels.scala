@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.functions.VectorFunctions.{dot, norm}
 import graft.llmops.{Dedup, TextAnalysis}
 
-/** Independent parity references for the production text kernels.
+/** Independent parity references for the production text and vector
+  * kernels.
   *
   * Every text-kernel family keeps ONE production form in `src/main`
   * (a native Catalyst expression or a compiled UDF). The slower forms
@@ -37,6 +39,9 @@ import graft.llmops.{Dedup, TextAnalysis}
   *    `langIdUdf` / `classifierCountsUdf` -> [[fingerprint]],
   *    [[langId]], [[hashedWeightSum]]
   *  - c4: `Web.c4LineClean` -> [[c4LineCleanExpr]]
+  *  - cosine: `CosineSimilarity` -> [[cosine]], [[cosineToQuery]],
+  *    [[cosineUdf]], [[cosineToQueryFast]]
+  *  - hot-bucket sub-split: `Skew.withSubBucket` -> [[subBucketOf]]
   */
 object ReferenceKernels {
 
@@ -362,5 +367,54 @@ object ReferenceKernels {
         size(kept) >= minKeptLines &&
           !contains(lower(col(textCol)), lit("lorem ipsum")) &&
           !contains(col(textCol), lit("{")))
+  }
+
+  // --- cosine ------------------------------------------------------------
+
+  /** Cosine similarity; 0.0 when either vector has zero norm. */
+  def cosine(a: Column, b: Column): Column = {
+    val d = dot(a, b)
+    val na = norm(a)
+    val nb = norm(b)
+    when(na === 0.0 || nb === 0.0, 0.0).otherwise(d / (na * nb))
+  }
+
+  /** Cosine against a fixed query vector (broadcast as a literal array). */
+  def cosineToQuery(col: Column, query: Seq[Double]): Column =
+    cosine(col.cast("array<double>"), array(query.map(lit): _*))
+
+  private def dotF(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  val cosineUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((a: Array[Double], b: Array[Double]) => {
+      val d = dotF(a, b)
+      val na = math.sqrt(dotF(a, a))
+      val nb = math.sqrt(dotF(b, b))
+      if (na == 0.0 || nb == 0.0) 0.0 else d / (na * nb)
+    })
+
+  /** Fast cosine against a fixed query vector (compiled; exact same
+    * result as [[cosineToQuery]]).
+    */
+  def cosineToQueryFast(c: Column, query: Seq[Double]): Column =
+    cosineUdf(c.cast("array<double>"), typedLit(query))
+
+  // --- hot-bucket sub-split ----------------------------------------------
+
+  /** The sub-bucket of `id` in a hot bucket split `k` ways, computed on
+    * the driver: the first 14 hex chars of md5(id.toString), read
+    * base-16, mod k.
+    */
+  def subBucketOf(id: Long, k: Long): Long = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = md.digest(id.toString.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString.take(14)
+    java.lang.Long.parseLong(hex, 16) % k
   }
 }
