@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 
 import graft.embed.DeterministicEmbedder
 import graft.core.{GraftSession, Sanitizer}
-import graft.query.{HybridExecutor, QueryIntent, RateLimiter, ResultFormatter}
+import graft.query.{EngineMetrics, HybridExecutor, QueryIntent, RateLimiter,
+  ResultFormatter}
 
 /** P1 live HTTP surface (reference services/api/chessmate_api.ml:586-724,
   * routes :809-827): the same `/query` contract as the reference API --
@@ -37,6 +38,16 @@ import graft.query.{HybridExecutor, QueryIntent, RateLimiter, ResultFormatter}
   *     [--rate-limit=RPM[:BURST]] [--rate-limit-body=BPM[:BURST]]
   */
 object ServeApp {
+
+  // TCP_NODELAY on every accepted connection. The JDK server writes the
+  // response headers and the body as separate segments; with Nagle on,
+  // the body waits for the client's delayed ACK of the headers (40 ms on
+  // Linux once quick-ack mode ends). The server reads the property once,
+  // when the first HttpServer is created, so it is set here, before
+  // [[start]]; a value given on the command line wins.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.app.ServeApp")
 
   val maxBodyBytes = 65536
 
@@ -166,9 +177,12 @@ object ServeApp {
     val plan = QueryIntent.analyse(
       QueryIntent.Request(parsed.question, parsed.limit, parsed.offset))
     val exec = HybridExecutor.execute(spark, tables, plan, embedder)
-    val (ranked, agentWarnings) = reranker match {
-      case Some(r) => graft.query.Reranker.applyOrFallback(exec.results, plan, r)
-      case None => (exec.results, Seq.empty[String])
+    val (rows, agentWarnings) = reranker match {
+      case Some(r) =>
+        val (reranked, warnings) =
+          graft.query.Reranker.applyOrFallback(exec.results, plan, r)
+        (reranked.collect().toSeq, warnings)
+      case None => (exec.resultRows, Seq.empty[String])
     }
     val agentStatus = reranker match {
       case None => "disabled"
@@ -176,50 +190,52 @@ object ServeApp {
         "circuit_open"
       case Some(_) => "enabled"
     }
-    val rows = ranked.collect().toSeq
-    val o = mapper.createObjectNode()
-    o.put("question", parsed.question)
-    o.set[ObjectNode]("plan", planJson(plan))
-    o.put("summary",
-      if (rows.isEmpty) "No games matched the requested filters."
-      else ResultFormatter.summarize(rows))
-    val rs: ArrayNode = o.putArray("results")
-    rows.foreach { row =>
-      val m = ResultFormatter.resultFields(row)
-      val n = mapper.createObjectNode()
-      m.foreach {
-        case (k, v: String) => n.put(k, v)
-        case (k, v: Double) => n.put(k, v)
-        case (k, Some(v: String)) => n.put(k, v)
-        case (k, Some(v: Int)) => n.put(k, v)
-        case (k, None) => n.putNull(k)
-        case (k, v) => n.put(k, String.valueOf(v))
-      }
-      // agent-tier columns ride the response only when the tier ran
-      if (reranker.isDefined && row.schema.fieldNames.contains("agent_score")) {
-        Option(row.getAs[java.lang.Double]("agent_score")) match {
-          case Some(s) => n.put("agent_score", s.doubleValue())
-          case None => n.putNull("agent_score")
+    EngineMetrics.timePhase("format") {
+      val o = mapper.createObjectNode()
+      o.put("question", parsed.question)
+      o.set[ObjectNode]("plan", planJson(plan))
+      o.put("summary",
+        if (rows.isEmpty) "No games matched the requested filters."
+        else ResultFormatter.summarize(rows))
+      val rs: ArrayNode = o.putArray("results")
+      rows.foreach { row =>
+        val m = ResultFormatter.resultFields(row)
+        val n = mapper.createObjectNode()
+        m.foreach {
+          case (k, v: String) => n.put(k, v)
+          case (k, v: Double) => n.put(k, v)
+          case (k, Some(v: String)) => n.put(k, v)
+          case (k, Some(v: Int)) => n.put(k, v)
+          case (k, None) => n.putNull(k)
+          case (k, v) => n.put(k, String.valueOf(v))
         }
-        Option(row.getAs[String]("explanation")) match {
-          case Some(e) => n.put("explanation", e)
-          case None => n.putNull("explanation")
+        // agent-tier columns ride the response only when the tier ran
+        if (reranker.isDefined &&
+            row.schema.fieldNames.contains("agent_score")) {
+          Option(row.getAs[java.lang.Double]("agent_score")) match {
+            case Some(s) => n.put("agent_score", s.doubleValue())
+            case None => n.putNull("agent_score")
+          }
+          Option(row.getAs[String]("explanation")) match {
+            case Some(e) => n.put("explanation", e)
+            case None => n.putNull("explanation")
+          }
+          ()
         }
-        ()
+        rs.add(n); ()
       }
-      rs.add(n); ()
+      o.put("offset", plan.offset)
+      o.put("limit", plan.limit)
+      o.put("total", exec.total)
+      o.put("has_more", exec.hasMore)
+      o.put("agent_status", agentStatus)
+      val allWarnings = exec.warnings ++ agentWarnings
+      if (allWarnings.nonEmpty) {
+        val ws = o.putArray("warnings")
+        allWarnings.foreach { w => ws.add(w); () }
+      }
+      o
     }
-    o.put("offset", plan.offset)
-    o.put("limit", plan.limit)
-    o.put("total", exec.total)
-    o.put("has_more", exec.hasMore)
-    o.put("agent_status", agentStatus)
-    val allWarnings = exec.warnings ++ agentWarnings
-    if (allWarnings.nonEmpty) {
-      val ws = o.putArray("warnings")
-      allWarnings.foreach { w => ws.add(w); () }
-    }
-    o
   }
 
   /** Bounded LRU response cache keyed on the full request identity
@@ -471,7 +487,11 @@ object ServeApp {
                     val payload =
                       try Right(queryResponse(spark, tables, embedder, p,
                         reranker).toString)
-                      catch { case e: Throwable => Left(e.getMessage) }
+                      catch {
+                        case e: Throwable =>
+                          log.error("/query failed", e)
+                          Left(e.getMessage)
+                      }
                     payload match {
                       case Right(body) =>
                         cache.foreach(_.put(key, body))
@@ -483,6 +503,7 @@ object ServeApp {
         }
       } catch {
         case e: Throwable =>
+          log.error("/query failed", e)
           try respond(ex, 500, errorJson(e.getMessage))
           catch { case _: Throwable => () }
       }

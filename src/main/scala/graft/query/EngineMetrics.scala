@@ -37,4 +37,23 @@ object EngineMetrics {
   val queryEmbeddingTotal: Metrics.Counter = Metrics.default.counter(
     "chessmate_api_query_embedding_total",
     "Query embedding resolutions by source", Seq("source"))
+
+  /** Per-phase latency of one served query: `page` (page top-k action),
+    * `vectors` (vector top-k action, concurrent with `page`), `score`
+    * (driver-side merge, scoring and rank once both actions returned;
+    * the scoring plan is analysed beside them) and `format` (response
+    * body). Buckets start at 0.5 ms: score and format are sub-ms.
+    */
+  val queryPhase: Metrics.Histogram = Metrics.default.histogram(
+    "chessmate_api_query_phase_seconds",
+    "Latency of one query phase in seconds", Seq("phase"),
+    Seq(0.0005, 0.001, 0.0025) ++ Metrics.defaultBuckets)
+
+  /** Run `body` and observe its wall time under `phase`. */
+  def timePhase[T](phase: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    val r = body
+    queryPhase.observe((System.nanoTime() - t0) / 1e9, Seq(phase))
+    r
+  }
 }

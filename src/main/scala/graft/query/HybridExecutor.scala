@@ -1,18 +1,33 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema,
+  IntegerLiteral, InterpretedOrdering, InterpretedProjection}
+import org.apache.spark.sql.catalyst.optimizer.{ReplaceExpressions,
+  RewriteWithExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit,
+  LocalLimit, LocalRelation, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType,
+  StructField, StructType}
 import graft.embed.{DeterministicEmbedder, Embedder}
 import graft.functions.VectorFunctions._
 import graft.query.QueryIntent.Plan
 
-/** The hybrid retrieval engine (reference lib/query/hybrid_executor.ml),
-  * as ONE DataFrame DAG per query:
+/** The hybrid retrieval engine (reference lib/query/hybrid_executor.ml):
   *
   *   games x players  --filter/sort/page-->  summaries (date-ordered page)
   *   vectors --payload-filter--> cosine top-k --> per-game hit collapse
   *   summaries LEFT JOIN hits --> score columns --> stable sort --> limit
+  *
+  * The lazy and batch paths run this as DataFrame DAGs. The eager
+  * per-query path (the serving default) runs only the two top-k legs as
+  * Spark actions, concurrently, and evaluates the join and scoring tail
+  * on the driver from the same Column builders ([[scoreLocal]]).
   *
   * Scale notes:
   *   - Both the game page and the KNN are `orderBy(...).limit(n)` =>
@@ -36,8 +51,19 @@ object HybridExecutor {
       vectors: Option[DataFrame],
       summariesPrebuilt: Option[DataFrame] = None)
 
-  final case class Execution(results: DataFrame, total: Long, hasMore: Boolean,
-      warnings: Seq[String])
+  /** One query's outcome. `rows` holds the final ranked rows when the
+    * executor already has them on the driver (the eager per-query path
+    * and the batch path); `results` is then a local frame over them,
+    * built only when a caller asks for a frame (reranker, gates).
+    */
+  final class Execution(frame: => DataFrame, val total: Long,
+      val hasMore: Boolean, val warnings: Seq[String],
+      val rows: Option[Seq[Row]] = None) {
+    lazy val results: DataFrame = frame
+    /** The final rows: the driver copy when there is one, else one
+      * collect of [[results]]. */
+    def resultRows: Seq[Row] = rows.getOrElse(results.collect().toSeq)
+  }
 
   val vectorWeight = 0.75
   val keywordWeight = 0.25
@@ -139,25 +165,16 @@ object HybridExecutor {
     * lowercased dedup-sorted union per tag list (same null handling:
     * null arrays and null elements are skipped). Bounded input by
     * construction (k rows), used only on the eager per-query path; the
-    * batch path keeps the distributed collapse and the bench asserts
-    * row-for-row equality between the two every run.
+    * batch path keeps the distributed collapse, and HybridExecutorSpec
+    * and the bench assert row-for-row equality between the two.
+    * Returns game_id -> the four [[hitFields]] values.
     */
-  private def collapseTopKLocal(rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-      : (java.util.List[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType) = {
-    import org.apache.spark.sql.types._
+  private def collapseTopKLocal(rows: Array[Row], schema: StructType)
+      : Map[Any, Seq[Any]] = {
     val gi = schema.fieldIndex("game_id")
     val si = schema.fieldIndex("score")
     val li = Seq("phases", "themes", "keywords").map(schema.fieldIndex)
-    val outSchema = StructType(Seq(schema(gi).copy(name = "game_id"),
-      StructField("hit_score", DoubleType),
-      StructField("hit_phases", ArrayType(StringType)),
-      StructField("hit_themes", ArrayType(StringType)),
-      StructField("hit_keywords", ArrayType(StringType))))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    rows.groupBy(_.get(gi)).foreach { case (gid, rs) =>
-      val score = rs.map(_.getDouble(si)).max
+    rows.groupBy(_.get(gi)).map { case (gid, rs) =>
       val unions = li.map { i =>
         val set = scala.collection.mutable.HashSet.empty[String]
         rs.foreach { r =>
@@ -166,11 +183,32 @@ object HybridExecutor {
         }
         set.toSeq.sorted
       }
-      out.add(org.apache.spark.sql.Row(
-        gid, score, unions(0), unions(1), unions(2)))
+      gid -> (rs.map(_.getDouble(si)).max +: unions)
     }
-    (out, outSchema)
   }
+
+  /** The per-game vector-hit columns the page is joined with. */
+  private val hitFields = Seq(StructField("hit_score", DoubleType),
+    StructField("hit_phases", ArrayType(StringType)),
+    StructField("hit_themes", ArrayType(StringType)),
+    StructField("hit_keywords", ArrayType(StringType)))
+
+  /** `df` plus all-null [[hitFields]]: scoring without a vectors table. */
+  private def withNullHits(df: DataFrame): DataFrame =
+    df.select(col("*") +: hitFields.map(f =>
+      lit(null).cast(f.dataType).as(f.name)): _*)
+
+  private val noVectorsWarning = "Vector search unavailable (no vectors table)"
+
+  /** Runs the eager path's two top-k actions. Daemon threads, so an
+    * embedding JVM can still exit.
+    */
+  private lazy val actionPool = java.util.concurrent.Executors
+    .newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-hybrid-action")
+      t.setDaemon(true)
+      t
+    }
 
   /** Full execution of a plan.
     *
@@ -206,16 +244,9 @@ object HybridExecutor {
 
     val base = tables.summariesPrebuilt
       .getOrElse(summaries(tables.games, tables.players))
-    def hitsFrame(vectors: DataFrame): DataFrame = {
-      val qv = queryVector(plan, embedder)
-      EngineMetrics.queryEmbeddingTotal.inc(Seq("deterministic"))
-      vectorHits(vectors, plan, qv)
-    }
     // R1 vector_only: semi/anti-join against embedded game ids (the
     // reference's `positions.vector_id IS (NOT) NULL` EXISTS clause).
-    val filtered0 = filteredFor(base, plan, tables)
-    // R3 page: played_on DESC NULLS LAST, id DESC; TakeOrderedAndProject.
-    val pageOrder = Seq(col("played_on").desc_nulls_last, col("game_id").desc)
+    val filtered = filteredFor(base, plan, tables)
     val pageLimit = plan.offset + plan.limit
     // QueryIntent.analyse clamps limit (<= maxLimit) but preserves any
     // requested offset (reference parity: query_intent.ml only enforces
@@ -226,34 +257,37 @@ object HybridExecutor {
     // (lazy count + lazy window page) instead of being truncated.
     val collectSafe =
       pageLimit <= QueryIntent.maxOffset + QueryIntent.maxLimit
-    val obs = if (computeTotal && collectSafe)
-      Some(org.apache.spark.sql.Observation()) else None
-    val filtered = obs.map(o =>
-      filtered0.observe(o, count(lit(1)).as("total"))).getOrElse(filtered0)
-    // On the eager (Observation) path, the vector top-k is bounded
-    // (<= max(3*limit, 15) rows) just like the page, so its single
-    // TakeOrderedAndProject action runs CONCURRENTLY with the page scan
-    // below, and the per-game collapse happens driver-side
-    // ([[collapseTopKLocal]], byte-equal to the TagUnionAgg collapse --
-    // bench-asserted): per-query latency becomes max(page scan, hit
-    // top-k) + a driver-local scoring job, instead of page scan THEN a
-    // second distributed action that also paid a collapse exchange +
-    // AQE replan.
-    val hitsEager: Option[scala.concurrent.Future[
-        (Array[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType)]] =
-      if (obs.isDefined) tables.vectors.map { vectors =>
-        val qv = queryVector(plan, embedder)
-        EngineMetrics.queryEmbeddingTotal.inc(Seq("deterministic"))
-        // plan construction (an eager analyzer pass) rides the future
-        // too, overlapping the page subtree's analysis + action
-        scala.concurrent.Future {
+    val vectorsQv = tables.vectors.map { vectors =>
+      EngineMetrics.queryEmbeddingTotal.inc(Seq("deterministic"))
+      (vectors, queryVector(plan, embedder))
+    }
+    if (!computeTotal || !collectSafe) {
+      // Lazy path: the page and the hit subtree stay lazy; the window
+      // runs over <= offset+limit rows only (limited inside).
+      val total = if (computeTotal) filtered.count() else -1L
+      val hits = vectorsQv.map { case (v, qv) => vectorHits(v, plan, qv) }
+      val (ranked, warnings) =
+        scoreAndRank(lazyPageFor(filtered, plan), plan, hits)
+      return new Execution(ranked, total,
+        hasMoreFor(plan, total, computeTotal), warnings)
+    }
+
+    // Eager path: the page top-k and the vector top-k run as two Spark
+    // actions at the same time, each on a pool thread, while this thread
+    // analyses the scoring plan ([[scoringPlan]] needs only the schema).
+    // The vector top-k is bounded (<= max(3*limit, 15) rows) just like
+    // the page, and its per-game collapse happens driver-side
+    // ([[collapseTopKLocal]]).
+    val hitsEager = vectorsQv.map { case (vectors, qv) =>
+      onPool(spark) {
+        EngineMetrics.timePhase("vectors") {
           val tk = vectorTopK(vectors, plan, qv)
-          (tk.collect(), tk.schema)
-        }(scala.concurrent.ExecutionContext.global)
-      } else None
-    // With computeTotal the page is collected HERE, as the terminal op of
-    // its own action: a terminal orderBy.limit.collect() runs as
+          collapseTopKLocal(tk.collect(), tk.schema)
+        }
+      }
+    }
+    // The page is collected as the terminal op of its own action:
+    // a terminal orderBy.limit.collect() runs as
     // TakeOrderedAndProject.executeCollect (per-partition top-k + driver
     // merge, NO exchange above the metrics node), so the observed count
     // rides the same single pass. Leaving the page lazy instead plans the
@@ -264,142 +298,119 @@ object HybridExecutor {
     // that by QueryIntent.maxOffset + maxLimit (= 5,500 small summary
     // rows) by design; offset is applied by dropping the already-sorted
     // prefix, exactly what the row_number window does on the lazy path.
-    val (pageRowsOpt, page, total) = obs match {
-      case Some(o) =>
-        val rows = filtered.orderBy(pageOrder: _*).limit(pageLimit).collect()
-        val kept = rows.drop(plan.offset)
-        val t = o.get("total") match {
-          case n: Long => n
-          case n: Number => n.longValue()
-        }
-        (Some(kept), null: DataFrame, t)
-      case None =>
-        // window over <= offset+limit rows only (limited inside).
-        val t = if (computeTotal) filtered0.count() else -1L
-        (None, lazyPageFor(filtered, plan), t)
+    val obs = org.apache.spark.sql.Observation()
+    val pageSchema = filtered.schema
+    val pageRows = onPool(spark) {
+      EngineMetrics.timePhase("page") {
+        filtered.observe(obs, count(lit(1)).as("total"))
+          .orderBy(pageOrder: _*).limit(pageLimit).collect()
+      }
     }
-
-    val (ranked, warnings) = (pageRowsOpt, hitsEager) match {
-      case (Some(kept), Some(fut)) =>
-        // Page AND hits are bounded local rows here, so the left join
-        // on game_id is a driver-side hash lookup instead of a Spark
-        // broadcast join -- one less exchange job and a smaller tree
-        // under the final local plan. Scoring still runs through the
-        // shared Column builders (rankScored), so formulas cannot
-        // drift from the batch path.
-        val (rows, schema) = scala.concurrent.Await.result(fut,
-          scala.concurrent.duration.Duration.Inf)
-        val (collapsed, _) = collapseTopKLocal(rows, schema)
-        import org.apache.spark.sql.types._
-        val gi = filtered.schema.fieldIndex("game_id")
-        val byGid = new java.util.HashMap[Any, org.apache.spark.sql.Row]()
-        collapsed.forEach(r => byGid.put(r.get(0), r))
-        val merged = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        kept.foreach { pr =>
-          val h = byGid.get(pr.get(gi))
-          val tail = if (h == null) Seq(null, null, null, null)
-            else Seq(h.get(1), h.get(2), h.get(3), h.get(4))
-          merged.add(org.apache.spark.sql.Row.fromSeq(pr.toSeq ++ tail))
-        }
-        val mergedSchema = StructType(filtered.schema.fields ++ Seq(
-          StructField("hit_score", DoubleType),
-          StructField("hit_phases", ArrayType(StringType)),
-          StructField("hit_themes", ArrayType(StringType)),
-          StructField("hit_keywords", ArrayType(StringType))))
-        // Jobless tail: applyScoring is pure Projects, so over this
-        // LocalRelation the optimizer folds the scoring projection into
-        // the LocalTableScan and collect() never touches the scheduler
-        // -- the third per-query Spark action (rankScored's
-        // TakeOrderedAndProject over <= offset+limit local rows, a full
-        // ~70-110 ms action slot) disappears. The V13 sort+limit runs
-        // driver-side over those same rows with rankScored's exact
-        // ordering (total_score desc, played_on desc NULLS LAST,
-        // game_id desc; ids are ASCII so String order == UTF8 binary
-        // order), and the bench asserts byte-equality to the
-        // executeBatch path -- which still runs the Spark orderBy --
-        // every run, so the orderings cannot drift silently.
-        val scored = applyScoring(
-          spark.createDataFrame(merged, mergedSchema), plan)
-        val proj = scored.select(
-          (resultColumns :+ "played_on").map(col): _*)
-        val sch = proj.schema
-        val all = proj.collect()
-        val iS = sch.fieldIndex("total_score")
-        val iD = sch.fieldIndex("played_on")
-        val iG = sch.fieldIndex("game_id")
-        val ord = new Ordering[org.apache.spark.sql.Row] {
-          def compare(x: org.apache.spark.sql.Row,
-              y: org.apache.spark.sql.Row): Int = {
-            val s = java.lang.Double.compare(
-              if (y.isNullAt(iS)) Double.NegativeInfinity
-              else y.getDouble(iS),
-              if (x.isNullAt(iS)) Double.NegativeInfinity
-              else x.getDouble(iS))
-            if (s != 0) s
-            else {
-              val d = (x.isNullAt(iD), y.isNullAt(iD)) match {
-                case (true, true) => 0
-                case (true, false) => 1 // desc NULLS LAST
-                case (false, true) => -1
-                case _ => y.getAs[java.sql.Date](iD)
-                  .compareTo(x.getAs[java.sql.Date](iD))
-              }
-              if (d != 0) d else y.getString(iG).compareTo(x.getString(iG))
-            }
-          }
-        }
-        val outIdx = resultColumns.map(sch.fieldIndex)
-        val top = all.sorted(ord).take(plan.limit).map { r =>
-          org.apache.spark.sql.Row.fromSeq(outIdx.map(r.get))
-        }
-        val finalSchema = StructType(outIdx.map(sch.fields))
-        (spark.createDataFrame(java.util.Arrays.asList(top: _*),
-          finalSchema), Seq.empty[String])
-      case _ =>
-        val localPage = pageRowsOpt match {
-          case Some(kept) => spark.createDataFrame(
-            java.util.Arrays.asList(kept: _*),
-            org.apache.spark.sql.types.StructType(filtered.schema))
-          case None => page
-        }
-        // lazy path (or no vectors): keep the hit subtree lazy too
-        scoreAndRank(localPage, plan, tables.vectors.map(hitsFrame))
+    val scoring = scoringPlan(spark, pageSchema, plan)
+    val kept = await(pageRows).drop(plan.offset)
+    val total = obs.get("total") match {
+      case n: Long => n
+      case n: Number => n.longValue()
     }
-
-    val hasMore =
-      if (computeTotal) {
-        val returned = math.min(plan.limit.toLong,
-          math.max(0L, total - plan.offset))
-        plan.offset + returned < total
-      } else false // unknown without the count; callers opted out
-    Execution(ranked, total, hasMore, warnings = warnings)
+    val hits = hitsEager.map(await)
+    val rows = EngineMetrics.timePhase("score") {
+      scoreLocal(kept, pageSchema, hits, scoring)
+    }
+    new Execution(spark.createDataFrame(rows.asJava, scoring.schema), total,
+      hasMoreFor(plan, total, computed = true),
+      if (hits.isEmpty) Seq(noVectorsWarning) else Nil, Some(rows))
   }
 
-  /** The scoring stage shared by per-query and batch execution: page ->
-    * vector-hit broadcast join -> score columns -> stable rank -> final
-    * projection. Pure column expressions over the page frame, so it
-    * behaves identically on a collected LocalRelation (per-query
-    * Observation path) and a lazy distributed page (batch path).
+  /** Run `body` on [[actionPool]] with the caller's Spark local
+    * properties -- scheduler pool, job group (so cancellation reaches the
+    * job) and any tracing property -- and active session.
+    */
+  private def onPool[T](spark: SparkSession)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      actionPool)(body)
+
+  private def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.get()
+    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+  private val pageOrder =
+    Seq(col("played_on").desc_nulls_last, col("game_id").desc)
+
+  private def hasMoreFor(plan: Plan, total: Long, computed: Boolean): Boolean =
+    computed && plan.offset + math.min(plan.limit.toLong,
+      math.max(0L, total - plan.offset)) < total
+
+  /** The eager path's scoring tail as a plan: [[rankScored]] itself --
+    * the scoring, the V13 rank and the final projection from the same
+    * Column builders the lazy and batch paths run -- analysed over an
+    * EMPTY local relation of the page-with-hits schema, so it needs no
+    * rows and can be built while the page and vector actions run. The
+    * analysed plan is a chain of Project / Sort / Limit nodes; the two
+    * rules replace the expressions the optimizer would replace before
+    * execution (RuntimeReplaceable, `With`). No optimizer run, no
+    * physical planning.
+    */
+  private def scoringPlan(spark: SparkSession, pageSchema: StructType,
+      plan: Plan): LogicalPlan = {
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(pageSchema.fields ++ hitFields))
+    RewriteWithExpression(ReplaceExpressions(
+      rankScored(empty, plan).queryExecution.analyzed))
+  }
+
+  /** Join the page rows with their collapsed hits (a driver-side hash
+    * lookup: both are bounded local rows) and interpret `scoring`
+    * ([[scoringPlan]]) over them with [[evalLocal]]: no Spark action, so
+    * the request's only SQL executions are the page and the vector top-k.
+    * HybridExecutorSpec asserts the rows byte-identical to the
+    * Spark-evaluated batch and lazy paths.
+    */
+  private def scoreLocal(page: Array[Row], pageSchema: StructType,
+      hits: Option[Map[Any, Seq[Any]]], scoring: LogicalPlan): Seq[Row] = {
+    val gi = pageSchema.fieldIndex("game_id")
+    val noHit = hitFields.map(_ => null)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
+      StructType(pageSchema.fields ++ hitFields))
+    val merged = page.toSeq.map { pr =>
+      val tail = hits.flatMap(_.get(pr.get(gi))).getOrElse(noHit)
+      toCatalyst(Row.fromSeq(pr.toSeq ++ tail)).asInstanceOf[InternalRow]
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(scoring.schema)
+    evalLocal(scoring, merged).map(toScala(_).asInstanceOf[Row])
+  }
+
+  /** Interpret an analysed Project / Sort / Limit chain over `input`,
+    * the rows of its single LocalRelation leaf.
+    */
+  private def evalLocal(p: LogicalPlan, input: Seq[InternalRow])
+      : Seq[InternalRow] = p match {
+    case _: LocalRelation => input
+    case Project(list, child) =>
+      val proj = new InterpretedProjection(list, child.output)
+      proj.initialize(0)
+      evalLocal(child, input).map(proj)
+    case s: Sort =>
+      evalLocal(s.child, input).sorted(
+        new InterpretedOrdering(s.order, s.child.output))
+    case GlobalLimit(IntegerLiteral(n), child) => evalLocal(child, input).take(n)
+    case LocalLimit(IntegerLiteral(n), child) => evalLocal(child, input).take(n)
+    case other => throw new IllegalStateException(
+      s"driver-side scoring cannot evaluate ${other.nodeName}")
+  }
+
+  /** The lazy path's scoring stage: page -> vector-hit broadcast join
+    * -> [[rankScored]]. Degrades to fallback scoring when there is no
+    * vectors table (the reference's "vector search unavailable" path).
     */
   private def scoreAndRank(page: DataFrame, plan: Plan,
-      hitsOpt: Option[DataFrame]): (DataFrame, Seq[String]) = {
-    // Vector stage (degrades to fallback scoring when no vectors table --
-    // the reference's "vector search unavailable" path). `hitsOpt` is
-    // either the lazy vectorHits subtree or its pre-collected local
-    // frame (Observation path) -- identical rows either way.
-    val (withHits, warnings) = hitsOpt match {
-      case Some(hits) =>
-        (page.join(broadcast(hits), Seq("game_id"), "left"), Seq.empty[String])
-      case None =>
-        (page.withColumn("hit_score", lit(null).cast("double"))
-          .withColumn("hit_phases", lit(null).cast("array<string>"))
-          .withColumn("hit_themes", lit(null).cast("array<string>"))
-          .withColumn("hit_keywords", lit(null).cast("array<string>")),
-          Seq("Vector search unavailable (no vectors table)"))
+      hitsOpt: Option[DataFrame]): (DataFrame, Seq[String]) =
+    hitsOpt match {
+      case Some(hits) => (rankScored(
+        page.join(broadcast(hits), Seq("game_id"), "left"), plan), Nil)
+      case None => (rankScored(withNullHits(page), plan), Seq(noVectorsWarning))
     }
-
-    (rankScored(withHits, plan), warnings)
-  }
 
   /** applyScoring + the V13 stable rank + final projection -- the tail
     * every serving path shares once its page-with-hits frame exists.
@@ -505,7 +516,6 @@ object HybridExecutor {
     * page; identical semantics to the per-query fallback branch.
     */
   private def lazyPageFor(filtered: DataFrame, plan: Plan): DataFrame = {
-    val pageOrder = Seq(col("played_on").desc_nulls_last, col("game_id").desc)
     val page0 = filtered.orderBy(pageOrder: _*).limit(plan.offset + plan.limit)
     if (plan.offset == 0) page0
     else {
@@ -618,8 +628,7 @@ object HybridExecutor {
 
     // ONE window cuts every plan's page (same order as the per-query
     // TakeOrderedAndProject; game_id makes the order total).
-    val pw = Window.partitionBy(col("__pid"))
-      .orderBy(col("played_on").desc_nulls_last, col("game_id").desc)
+    val pw = Window.partitionBy(col("__pid")).orderBy(pageOrder: _*)
     val page = tagged.withColumn("__rn", row_number().over(pw))
       .where(col("__rn") > byPid(p => lit(p.offset)) &&
         col("__rn") <= byPid(p => lit(p.offset + p.limit)))
@@ -657,11 +666,7 @@ object HybridExecutor {
         (page.join(broadcast(hits), Seq("__pid", "game_id"), "left"),
           Seq.empty[String])
       case None =>
-        (page.withColumn("hit_score", lit(null).cast("double"))
-          .withColumn("hit_phases", lit(null).cast("array<string>"))
-          .withColumn("hit_themes", lit(null).cast("array<string>"))
-          .withColumn("hit_keywords", lit(null).cast("array<string>")),
-          Seq("Vector search unavailable (no vectors table)"))
+        (withNullHits(page), Seq(noVectorsWarning))
     }
 
     // Scoring: the per-query builders under CASE dispatch (tokens is
@@ -694,24 +699,15 @@ object HybridExecutor {
         plans.indices.map(i => counts.getOrElse(i, 0L))
       } else plans.indices.map(_ => -1L)
 
-    val schema = org.apache.spark.sql.types.StructType(
-      ranked.schema.drop(2)) // minus __pid, __rk
+    val schema = StructType(ranked.schema.drop(2)) // minus __pid, __rk
     val byPlan = rows.groupBy(_.getInt(0))
     val out = plans.zipWithIndex.map { case (plan, i) =>
-      val mine = byPlan.getOrElse(i, Array.empty[org.apache.spark.sql.Row])
+      val mine: Seq[Row] = byPlan.getOrElse(i, Array.empty[Row]).toSeq
         .sortBy(_.getInt(1)) // __rk: the in-plan rank computed by Spark
-        .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2)))
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(mine: _*), schema)
-      val total = totals(i)
-      val hasMore =
-        if (computeTotals) {
-          val returned = math.min(plan.limit.toLong,
-            math.max(0L, total - plan.offset))
-          plan.offset + returned < total
-        } else false
+        .map(r => new GenericRowWithSchema(r.toSeq.drop(2).toArray, schema))
       EngineMetrics.requestsTotal.inc(Seq("hybrid_batch", "ok"))
-      Execution(local, total, hasMore, perPlanWarnings)
+      new Execution(spark.createDataFrame(mine.asJava, schema), totals(i),
+        hasMoreFor(plan, totals(i), computeTotals), perPlanWarnings, Some(mine))
     }
     EngineMetrics.requestLatency.observe(
       (System.nanoTime() - started) / 1e9, Seq("hybrid_batch"))

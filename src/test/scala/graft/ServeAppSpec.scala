@@ -143,8 +143,44 @@ class ServeAppSpec extends SparkSpec {
         assert(c.has("required") && c.has("detail"))
       }
       assert(checks.get(0).get("detail").asText().startsWith("games="))
-      assert(get("/metrics").statusCode() === 200)
+      val m = get("/metrics")
+      assert(m.statusCode() === 200)
+      // per-phase serving latency, observed by the /query calls above
+      val mj = om.readTree(m.body())
+      Seq("page", "vectors", "score", "format").foreach { phase =>
+        val series =
+          s"""chessmate_api_query_phase_seconds_count{phase="$phase"}"""
+        assert(mj.has(series), s"/metrics lacks $series")
+        assert(mj.get(series).asDouble() >= 1.0)
+      }
     } finally server.stop(0)
+  }
+
+  test("keep-alive responses leave at once: no Nagle / delayed-ACK stall") {
+    // The JDK server writes headers and body as two segments. With Nagle
+    // on, the body waits for the client's delayed ACK of the headers:
+    // ~40 ms per request once TCP quick-ack mode ends. /metrics runs no
+    // Spark job, so the median request is well under a millisecond
+    // without the stall.
+    val (t, v) = graft.gate.ChessQueries.data(spark)
+    val tables = HybridExecutor.Tables(t.games, t.players, Some(v))
+    val embedder = DeterministicEmbedder(graft.gate.ChessQueries.embedDims)
+    val server = ServeApp.start(spark, tables, embedder, port = 0)
+    try {
+      val client = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${server.getAddress.getPort}/metrics")).build()
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() === 200)
+        (System.nanoTime() - t0) / 1e6
+      }
+      val median = ms.sorted.apply(ms.length / 2)
+      assert(median < 20.0,
+        f"median $median%.1f ms; all: ${ms.map(x => f"$x%.1f").mkString(" ")}")
+    } finally ServeApp.stop(server)
   }
 
   test("concurrent load: parallel clients get consistent 200s") {
